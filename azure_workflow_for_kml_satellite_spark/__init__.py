@@ -69,10 +69,7 @@ def get_spark(
         # 64 reduce partitions, 4.06 s → 0.59 s wall). The sort writer
         # (one output file per map task) is the safe choice at any scale —
         # it is already what runs for reduce-counts > 200.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_THRESHOLD", "2"),
-        )
+        .config("spark.shuffle.sort.bypassMergeThreshold", "2")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # glibc: serve large numpy allocations from the heap instead of fresh
         # mmaps — this sandbox page-faults new mappings at ~170 MB/s, which

@@ -27,7 +27,7 @@
  * Shape: per output row, elementwise passes over small row buffers
  * (L1-resident, auto-vectorizable) followed by a scalar compaction —
  * the same loop structure numpy uses, minus ~30 full-array DRAM passes
- * and the Python dispatch. All REDUCTIONS stay in numpy.
+ * and the Python dispatch. The reductions are kmlsat_stats_f32 (§stats).
  *
  * Thread-safety: the row scratch is process-global (PySpark workers run
  * one task at a time; mirrors raster._SCRATCH).
@@ -492,7 +492,8 @@ static void radix_select_pair(const float *a, int64_t n, int64_t k1, int64_t k2,
 /* All per-row reductions in one call.
  * out6: {mean, std, min, max, med_lo, med_hi}; out2: {n_loss, n_gain}.
  * med_lo/med_hi are np.sort(a)[n//2 - 1] / [n//2] (med_lo == med_hi for
- * odd n) — the caller reproduces _median_sorted's np.mean on them.
+ * odd n) — the reducer (raster.reduce_valid) takes np.median's final
+ * np.mean of them.
  * Caller guarantees n >= 1, no NaN. */
 void kmlsat_stats_f32(const float *a, int64_t n, float loss_t, float gain_t,
                       float *out6, int64_t *out2) {

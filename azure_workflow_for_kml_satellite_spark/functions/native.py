@@ -3,10 +3,13 @@
 Compiles the C source with the system gcc on first use (cached as
 ``/tmp/kmlsat_native_<sha1>.so``, atomic rename so concurrent Spark
 workers race safely) and exposes typed wrappers. Anything missing or
-failing — no gcc, compile error, load error — leaves ``LIB = None`` and
-the callers keep the pure-numpy path, which produces bit-identical
-results (the C kernels are an exact mirror; see native.c header and
-tests/test_native_kernels.py).
+failing — no gcc, compile error, load error — leaves ``LIB = None``. The
+only callers are the window producer, the pair producer and the reducer
+in functions/raster.py; each then takes its numpy path, which produces
+bit-identical results (the C kernels are an exact mirror; see native.c
+header and tests/test_native_kernels.py). The reducer also checks
+``stats_f32`` against numpy once per process and keeps to numpy when
+they differ.
 
 Flags: ``-O3 -ffp-contract=off`` and no fast-math — f32 subtract/add/
 divide stay IEEE correctly-rounded scalar semantics, so C and numpy

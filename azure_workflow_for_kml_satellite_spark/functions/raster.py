@@ -14,14 +14,16 @@ Synthetic scenes are EPSG:4326 north-up grids anchored at the scene bbox
 top-left; the reference's bbox CRS transform (geo.py:85-104) is the identity
 in that case, preserving its windowing semantics.
 
-NDVI rasters travel between stages as a tiny self-describing binary codec
-(``pack_raster``/``unpack_raster``) playing the float32-GeoTIFF role
-(ndvi.py:239-255) without rasterio.
+NDVI is evaluated per window by one window producer (compacted valid
+values + masked count), one pair producer (compacted jointly-valid deltas)
+and one reducer; the operators build their output columns from those. A
+full masked NDVI raster is built only where it is the output (the float32
+GeoTIFF export, functions/geotiff.py, and the UTM reprojection).
 """
 
 from __future__ import annotations
 
-import struct
+import ctypes
 import zlib
 
 import numpy as np
@@ -94,41 +96,9 @@ def _hash_grid(seed: int, band: int, row0: int, row1: int, col0: int, col1: int,
 DEG_PER_METRE = 1.0 / 111_320.0
 
 
-def grid_shape(bbox: list[float], resolution_m: float) -> tuple[int, int]:
-    """(height, width) of a scene raster covering bbox at resolution_m."""
-    px = resolution_m * DEG_PER_METRE
-    h = max(1, int(round((bbox[3] - bbox[1]) / px)))
-    w = max(1, int(round((bbox[2] - bbox[0]) / px)))
-    return h, w
-
-
-def window_from_bounds(
-    scene_bbox: list[float],
-    resolution_m: float,
-    read_bbox: list[float],
-) -> tuple[int, int, int, int] | None:
-    """Pixel window (row0, row1, col0, col1) for read_bbox, clamped to the
-    scene raster — the role of rasterio.windows.from_bounds + clamp
-    (reference: ndvi.py:474-478). Floor/ceil semantics: any pixel touching
-    the bbox is included.
-    """
-    px = resolution_m * DEG_PER_METRE
-    h, w = grid_shape(scene_bbox, resolution_m)
-    x0, y1 = scene_bbox[0], scene_bbox[3]
-    import math
-
-    col0 = max(0, min(w, int(math.floor((read_bbox[0] - x0) / px))))
-    col1 = max(0, min(w, int(math.ceil((read_bbox[2] - x0) / px))))
-    row0 = max(0, min(h, int(math.floor((y1 - read_bbox[3]) / px))))
-    row1 = max(0, min(h, int(math.ceil((y1 - read_bbox[1]) / px))))
-    if col1 <= col0 or row1 <= row0:
-        return None
-    return row0, row1, col0, col1
-
-
 def grid_shape_m(bbox_m: list[float], resolution_m: float) -> tuple[int, int]:
-    """(height, width) of a PROJECTED-CRS scene raster (bbox in metres,
-    pixel size = resolution_m in CRS units — the UTM-scene grid)."""
+    """(height, width) of a scene raster covering bbox_m at a pixel size of
+    resolution_m CRS units (metres on the UTM-scene grid)."""
     h = max(1, int(round((bbox_m[3] - bbox_m[1]) / resolution_m)))
     w = max(1, int(round((bbox_m[2] - bbox_m[0]) / resolution_m)))
     return h, w
@@ -139,8 +109,11 @@ def window_from_bounds_m(
     resolution_m: float,
     read_bbox_m: list[float],
 ) -> tuple[int, int, int, int] | None:
-    """Metric-grid variant of ``window_from_bounds`` for projected (UTM)
-    scenes: identical floor/ceil + clamp semantics, pixel size in metres."""
+    """Pixel window (row0, row1, col0, col1) for read_bbox_m, clamped to the
+    scene raster — the role of rasterio.windows.from_bounds + clamp
+    (reference: ndvi.py:474-478). Floor/ceil semantics: any pixel touching
+    the bbox is included. Pixel size in CRS units.
+    """
     import math
 
     px = resolution_m
@@ -155,8 +128,22 @@ def window_from_bounds_m(
     return row0, row1, col0, col1
 
 
-# uint8-indexed validity table for the SCL mask (see ndvi_s2): one gather
-# replaces np.isin's sort/search on every window
+def grid_shape(bbox: list[float], resolution_m: float) -> tuple[int, int]:
+    """(height, width) of a geographic (EPSG:4326) scene raster."""
+    return grid_shape_m(bbox, resolution_m * DEG_PER_METRE)
+
+
+def window_from_bounds(
+    scene_bbox: list[float],
+    resolution_m: float,
+    read_bbox: list[float],
+) -> tuple[int, int, int, int] | None:
+    """``window_from_bounds_m`` on a geographic scene grid (degree pixels)."""
+    return window_from_bounds_m(scene_bbox, resolution_m * DEG_PER_METRE, read_bbox)
+
+
+# uint8-indexed validity table for the SCL mask (see iter_masked_ndvi_chunks):
+# one gather replaces np.isin's sort/search on every window
 _SCL_VALID_LUT = np.zeros(256, dtype=np.bool_)
 _SCL_VALID_LUT[list(VALID_SCL_CLASSES)] = True
 
@@ -247,60 +234,6 @@ def gen_band(
     raise ValueError(f"unknown band code {band}")
 
 
-def read_window_bands(
-    scene_id: str,
-    scene_bbox: list[float],
-    resolution_m: float,
-    read_bbox: list[float],
-    collection: str,
-) -> dict[str, np.ndarray] | None:
-    """Windowed 'COG read' of the synthetic scene: returns the band arrays the
-    NDVI kernels need. S2: red/nir at resolution_m + scl at 2x pixel size
-    (20 m vs 10 m — exercises the categorical resample path, ndvi.py:166-180).
-    Landsat: red/nir/qa all at resolution_m.
-    """
-    seed = scene_seed(scene_id)
-    win = window_from_bounds(scene_bbox, resolution_m, read_bbox)
-    if win is None:
-        return None
-    out = {
-        "red": gen_band(seed, BAND_RED, win),
-        "nir": gen_band(seed, BAND_NIR, win),
-    }
-    if collection == "sentinel-2-l2a":
-        scl_win = window_from_bounds(scene_bbox, resolution_m * 2, read_bbox)
-        if scl_win is not None:
-            out["scl"] = gen_band(seed, BAND_SCL, scl_win)
-    elif collection == "landsat-c2-l2":
-        out["qa"] = gen_band(seed, BAND_QA, win)
-    return out
-
-
-def read_window_bands_utm(
-    scene_id: str,
-    scene_bbox_m: list[float],
-    resolution_m: float,
-    read_bbox_m: list[float],
-) -> dict[str, np.ndarray] | None:
-    """Windowed read of the UTM-gridded sentinel variant of a scene (the
-    reference reads every COG on its native UTM grid after transforming the
-    AOI bbox into the scene CRS, fulfilment.py:264-271). Distinct raster
-    content from the geographic variant (seed is salted with ':utm');
-    red/nir at resolution_m, SCL at 2x pixel size, all in CRS metres."""
-    seed = scene_seed(scene_id + ":utm")
-    win = window_from_bounds_m(scene_bbox_m, resolution_m, read_bbox_m)
-    if win is None:
-        return None
-    out = {
-        "red": gen_band(seed, BAND_RED, win),
-        "nir": gen_band(seed, BAND_NIR, win),
-    }
-    scl_win = window_from_bounds_m(scene_bbox_m, resolution_m * 2, read_bbox_m)
-    if scl_win is not None:
-        out["scl"] = gen_band(seed, BAND_SCL, scl_win)
-    return out
-
-
 def read_class_window(
     layer_name: str, read_bbox: list[float], resolution_m: float
 ) -> np.ndarray | None:
@@ -344,13 +277,27 @@ def class_histogram(classes: np.ndarray) -> list[dict]:
     return rows
 
 
-# ── reference numpy kernels ──────────────────────────────────────────────────
+# ── NDVI window evaluator ───────────────────────────────────────────────────
+#
+# The window-size distribution is extremely skewed (sf0.1: p50 ≈ 12.6k px,
+# p99 ≈ 1.2M px, max ≈ 7.8M px). The numpy path therefore evaluates a window
+# in ~45k-px row blocks so the working set stays cache-resident (measured
+# 2260 ms → 383 ms on a 2784² window against whole-window arrays). Every
+# value is bit-identical to the whole-window evaluation (the
+# oracle/kernels.py reference): band pixels are window-placement pure, all
+# kernel ops are elementwise (or row/col-index pure, for the SCL resample),
+# and per-block compaction concatenates to exactly the row-major
+# ``ndvi[valid_mask]`` array. When the ctypes library is loaded
+# (functions/native.c) one fused C pass (hash → band → NDVI → mask →
+# compaction) replaces the blocks, and C reductions replace numpy's; both are
+# exact mirrors, pinned by tests/test_native_kernels.py.
 
 
 def _resample_indices(
     src_shape: tuple[int, int], target_shape: tuple[int, int]
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Pixel-centre nearest-neighbour index arrays; cached — window shapes
+    """Pixel-centre nearest-neighbour index arrays (reference: ndvi.py:487-510
+    — must match exactly: affects masked counts); cached — window shapes
     repeat across the frames of an AOI and across same-sized AOIs, and the
     arrays depend only on the two shapes."""
     key = (src_shape, target_shape)
@@ -370,15 +317,6 @@ def _resample_indices(
 
 
 _RESAMPLE_IDX: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def resample_nearest(src: np.ndarray, target_shape: tuple[int, int]) -> np.ndarray:
-    """Categorical nearest-neighbour resample, pixel-centre mapping
-    (reference: ndvi.py:487-510 — must match exactly: affects masked counts)."""
-    if src.shape == tuple(target_shape):
-        return src
-    row_idx, col_idx = _resample_indices(src.shape, tuple(target_shape))
-    return src[np.ix_(row_idx, col_idx)]
 
 
 def _ndvi_core(red_raw: np.ndarray, nir_raw: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -416,131 +354,6 @@ def _ndvi_core(red_raw: np.ndarray, nir_raw: np.ndarray) -> tuple[np.ndarray, np
     return ndvi_full, vm
 
 
-def ndvi_s2(
-    red_raw: np.ndarray, nir_raw: np.ndarray, scl: np.ndarray | None
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """Sentinel-2 NDVI + validity mask + SCL masked count
-    (reference: ndvi.py:158-215 pure-python path, incl. shape-mismatch trim)."""
-    if red_raw.shape != nir_raw.shape:
-        min_h = min(red_raw.shape[0], nir_raw.shape[0])
-        min_w = min(red_raw.shape[1], nir_raw.shape[1])
-        red_raw = red_raw[:min_h, :min_w]
-        nir_raw = nir_raw[:min_h, :min_w]
-    scl_mask = resample_nearest(scl, red_raw.shape) if scl is not None else None
-    ndvi, valid_mask = _ndvi_core(red_raw, nir_raw)
-    scl_masked_count = 0
-    if scl_mask is not None:
-        # identical semantics to np.isin(scl_mask, VALID_SCL_CLASSES) but a
-        # 256-entry table gather instead of a sort/search — np.isin measured
-        # ~24% of this whole kernel on 12.5k-px windows
-        scl_valid = _SCL_VALID_LUT[scl_mask]
-        scl_masked_count = int(np.sum(valid_mask & ~scl_valid))
-        np.logical_and(valid_mask, scl_valid, out=valid_mask)
-    return ndvi, valid_mask, scl_masked_count
-
-
-def ndvi_landsat(
-    red_raw: np.ndarray, nir_raw: np.ndarray, qa: np.ndarray | None
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """Landsat NDVI + validity mask + QA masked count
-    (reference: ndvi.py:376-411)."""
-    if red_raw.shape != nir_raw.shape:
-        min_h = min(red_raw.shape[0], nir_raw.shape[0])
-        min_w = min(red_raw.shape[1], nir_raw.shape[1])
-        red_raw = red_raw[:min_h, :min_w]
-        nir_raw = nir_raw[:min_h, :min_w]
-    ndvi, valid_mask = _ndvi_core(red_raw, nir_raw)
-    qa_masked_count = 0
-    if qa is not None:
-        if qa.shape != red_raw.shape:
-            qa = resample_nearest(qa, red_raw.shape)
-        qa_mask = (qa.astype(np.uint16) & np.uint16(LANDSAT_QA_CLOUD_BITS)) == 0
-        qa_masked_count = int(np.sum(valid_mask & ~qa_mask))
-        np.logical_and(valid_mask, qa_mask, out=valid_mask)
-    return ndvi, valid_mask, qa_masked_count
-
-
-def ndvi_statistics(ndvi: np.ndarray, valid_mask: np.ndarray) -> dict | None:
-    """Rounded stats over valid pixels (reference: ndvi.py:217-236). Returns
-    None when no valid pixels (reference returns None → frame has no stat)."""
-    return ndvi_statistics_from_values(ndvi[valid_mask], int(ndvi.size))
-
-
-def ndvi_statistics_from_values(
-    valid_pixels: np.ndarray, total_pixels: int
-) -> dict | None:
-    """The ndvi_statistics reductions over an already-compacted valid-pixel
-    array (row-major order). The blocked window path concatenates per-block
-    compactions into exactly the array ``ndvi[valid_mask]`` yields, so both
-    entry points are bit-identical."""
-    n = len(valid_pixels)
-    if n == 0:
-        return None
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    if (
-        N.available()
-        and valid_pixels.dtype == np.float32
-        and valid_pixels.flags["C_CONTIGUOUS"]
-    ):
-        # one fused C call (native.c §stats — bitwise np.mean/np.std and
-        # np.sort's order statistics; tests/test_native_kernels.py pins it)
-        mean, std, vmin, vmax, med_lo, med_hi, _, _ = N.stats_f32(valid_pixels)
-        return {
-            "mean": round(mean, 4),
-            "min": round(vmin, 4),
-            "max": round(vmax, 4),
-            "std": round(std, 4),
-            "median": round(float(_median_of_pair(med_lo, med_hi, n)), 4),
-            "valid_pixels": int(n),
-            "total_pixels": int(total_pixels),
-        }
-    s = np.sort(valid_pixels)
-    return {
-        "mean": round(float(np.mean(valid_pixels)), 4),
-        "min": round(float(s[0]), 4),
-        "max": round(float(s[-1]), 4),
-        "std": round(float(np.std(valid_pixels)), 4),
-        "median": round(float(_median_sorted(s)), 4),
-        "valid_pixels": int(n),
-        "total_pixels": int(total_pixels),
-    }
-
-
-def _median_sorted(s: np.ndarray):
-    """np.median of a NaN-free array, taken from its sorted copy. Identical
-    value: np.median partitions to the same order statistics this sorted
-    array holds, then np.mean's the middle slice — reproduced verbatim here.
-    (On this numpy build, SIMD np.sort beats introselect np.partition ~1.5x
-    on the duplicate-heavy NDVI distribution, and the sorted array also gives
-    min/max for free.)"""
-    n = len(s)
-    h = n // 2
-    return np.mean(s[h - 1 : h + 1]) if n % 2 == 0 else np.mean(s[h : h + 1])
-
-
-def _median_of_pair(med_lo: float, med_hi: float, n: int):
-    """_median_sorted from the two middle order statistics (as produced by
-    the native radix select): the same np.mean call on the same values, so
-    the result is bit-identical to the sorted-slice path."""
-    if n % 2 == 0:
-        return np.mean(np.array([med_lo, med_hi], dtype=np.float32))
-    return np.mean(np.array([med_hi], dtype=np.float32))
-
-
-# ── cache-blocked window evaluation ─────────────────────────────────────────
-#
-# The window-size distribution is extremely skewed (sf0.1: p50 ≈ 12.6k px,
-# p99 ≈ 1.2M px, max ≈ 7.8M px — roughly two thirds of all pixels live in the
-# top 1% of rows). The full-window path streams ~13 scratch buffers of up to
-# 31 MB each through DRAM per elementwise op; processed in ~45k-px row blocks
-# the working set stays cache-resident and the same ops run 5-6x faster on
-# monster windows (measured 2260 ms → 383 ms on a 2784² window) while small
-# windows are unchanged (a single block). Every value is bit-identical: band
-# pixels are window-placement pure, all kernel ops are elementwise (or
-# row/col-index pure, for the SCL resample), and compaction per block
-# concatenates to exactly the row-major ``ndvi[valid_mask]`` array.
-
 _BLOCK_TARGET_PX = 45056
 
 
@@ -557,9 +370,9 @@ def iter_masked_ndvi_chunks(
     out_w: int | None = None,
 ):
     """Yield ``(ndvi, valid_mask, masked_count)`` row blocks of a window's
-    NDVI, cache-blocked; bit-identical to gen_band + ndvi_s2/ndvi_landsat on
-    the full window. ``aux_win`` is the SCL window (S2) or the QA window ==
-    ``win`` (Landsat); ``out_h``/``out_w`` optionally trim to the top-left
+    NDVI, cache-blocked; bit-identical to the reference's whole-window
+    S2/Landsat kernels. ``aux_win`` is the SCL window (S2) or the QA window
+    == ``win`` (Landsat); ``out_h``/``out_w`` optionally trim to the top-left
     (the change-pair ``[:min_h, :min_w]`` semantics). Yielded arrays are
     scratch-backed — consume (or copy) before the next iteration."""
     r0, _r1, c0, _c1 = win
@@ -571,7 +384,7 @@ def iter_masked_ndvi_chunks(
     if aux_win is not None and not use_qa:
         scl_shape = (aux_win[1] - aux_win[0], aux_win[3] - aux_win[2])
         # resample indices are computed against the FULL window shape (the
-        # full path resamples before any trim), then sliced per block/trim
+        # reference resamples before any trim), then sliced per block/trim
         row_idx, col_idx = _resample_indices(scl_shape, (h_full, w_full))
         if w != w_full:
             col_idx = col_idx[:w]
@@ -599,22 +412,34 @@ def iter_masked_ndvi_chunks(
         yield ndvi, vm, masked
 
 
-def s2_aux_win(
-    scene_bbox: list[float], resolution_m: float, read_bbox: list[float]
-) -> tuple[int, int, int, int] | None:
-    """SCL window for an S2 read (2x pixel size; reference: ndvi.py:166-180)."""
-    return window_from_bounds(scene_bbox, resolution_m * 2, read_bbox)
+# The row columns that let a UDF regenerate one frame's NDVI window.
+RECIPE_COLUMNS = [
+    "scene_id", "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
+    "resolution_m", "ndvi_collection", "min_lon", "min_lat", "max_lon", "max_lat",
+]
 
 
-# ── fused native kernels (functions/native.c; bit-identical fast path) ──────
-#
-# When the ctypes library is available the window/pair evaluators below feed
-# the SAME numpy reductions from a single fused C pass (hash → band → NDVI →
-# mask → row-major compaction), instead of ~30 elementwise numpy passes. The
-# C mirror is exact (see native.c header); reductions never move out of
-# numpy, so every downstream value is bit-identical either way. The numpy
-# blocked path remains both the fallback and the differential oracle
-# (tests/test_native_kernels.py).
+def window_recipe(rec: dict, prefix: str = ""):
+    """``(seed, collection, win, aux_win)`` of a row's windowed scene read
+    (its ``RECIPE_COLUMNS``, optionally prefixed), or None when the window
+    is empty.
+    ``aux_win`` is the QA window (== ``win``, Landsat) or the SCL window at
+    2x pixel size (S2; reference: ndvi.py:166-180)."""
+    p = lambda c: rec[prefix + c]
+    scene_bbox = [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")]
+    read_bbox = [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")]
+    res, collection = p("resolution_m"), p("ndvi_collection")
+    win = window_from_bounds(scene_bbox, res, read_bbox)
+    if win is None:
+        return None
+    aux_win = win if collection == "landsat-c2-l2" else window_from_bounds(
+        scene_bbox, res * 2, read_bbox
+    )
+    return scene_seed(p("scene_id")), collection, win, aux_win
+
+
+_I64P = ctypes.POINTER(ctypes.c_int64)
+_F32P = ctypes.POINTER(ctypes.c_float)
 
 
 def native_side_params(
@@ -624,38 +449,23 @@ def native_side_params(
     aux_win: tuple[int, int, int, int] | None,
     out_h: int,
     out_w: int,
-):
-    """(kind, r0, c0, aux_r0, aux_c0, row_idx, col_idx, seed%1000) for one
-    side of a native kernel call. Resample indices are computed against the
-    FULL window shape then trimmed — the numpy path's exact semantics."""
+) -> tuple:
+    """One side's native kernel arguments: (seed, kind, r0, c0, aux_r0,
+    aux_c0, row_idx*, col_idx*, seed%1000). Resample indices are computed
+    against the FULL window shape then trimmed — the numpy path's exact
+    semantics (the pointers keep their arrays alive)."""
     from azure_workflow_for_kml_satellite_spark.functions import native as N
 
-    r0, _r1, c0, _c1 = win
+    seed32, s1000 = int(seed) & 0xFFFFFFFF, int(seed) % 1000
     if collection == "landsat-c2-l2":
-        return N.KIND_LANDSAT, r0, c0, 0, 0, None, None, int(seed) % 1000
+        return (seed32, N.KIND_LANDSAT, win[0], win[2], 0, 0, None, None, s1000)
     if aux_win is None:
-        return N.KIND_BARE, r0, c0, 0, 0, None, None, int(seed) % 1000
-    h_full, w_full = win[1] - win[0], win[3] - win[2]
+        return (seed32, N.KIND_BARE, win[0], win[2], 0, 0, None, None, s1000)
     scl_shape = (aux_win[1] - aux_win[0], aux_win[3] - aux_win[2])
-    row_idx, col_idx = _resample_indices(scl_shape, (h_full, w_full))
-    return (
-        N.KIND_S2,
-        r0,
-        c0,
-        aux_win[0],
-        aux_win[2],
-        np.ascontiguousarray(row_idx[:out_h]),
-        np.ascontiguousarray(col_idx[:out_w]),
-        int(seed) % 1000,
-    )
-
-
-def _i64p(arr):
-    import ctypes
-
-    if arr is None:
-        return None
-    return arr.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))
+    row_idx, col_idx = _resample_indices(scl_shape, (win[1] - win[0], win[3] - win[2]))
+    ri = np.ascontiguousarray(row_idx[:out_h], np.int64).ctypes.data_as(_I64P)
+    ci = np.ascontiguousarray(col_idx[:out_w], np.int64).ctypes.data_as(_I64P)
+    return (seed32, N.KIND_S2, win[0], win[2], aux_win[0], aux_win[2], ri, ci, s1000)
 
 
 def native_window_valid(
@@ -667,103 +477,145 @@ def native_window_valid(
     """(valid NDVI values row-major — a scratch view, consume before the
     next call — , masked_count) for the full window, via the fused C pass.
     Caller must have checked native.available()."""
-    import ctypes
-
     from azure_workflow_for_kml_satellite_spark.functions import native as N
 
     h, w = win[1] - win[0], win[3] - win[2]
-    kind, r0, c0, ar0, ac0, ri, ci, s1000 = native_side_params(
-        seed, collection, win, aux_win, h, w
-    )
+    side = native_side_params(seed, collection, win, aux_win, h, w)
     buf = _scratch("nat_vals", h * w, np.float32)
     masked = ctypes.c_int64(0)
     n = N.LIB.kmlsat_window_valid(
-        int(seed) & 0xFFFFFFFF, kind, r0, c0, h, w, ar0, ac0,
-        _i64p(ri), _i64p(ci), s1000,
-        buf.ctypes.data_as(ctypes.POINTER(ctypes.c_float)),
-        ctypes.byref(masked),
+        *side[:4], h, w, *side[4:], buf.ctypes.data_as(_F32P), ctypes.byref(masked)
     )
     return buf[: int(n)], int(masked.value)
 
 
-def ndvi_window_stats_blocked(
-    scene_id: str,
-    scene_bbox: list[float],
-    resolution_m: float,
-    read_bbox: list[float],
-    collection: str,
-) -> tuple[dict | None, int] | None:
-    """Windowed read + NDVI kernel + stats for one row, cache-blocked.
-    Returns None when the window is empty (the ``bands is None`` case),
-    else ``(stats | None, masked_count)`` — exactly the values the
-    read_window_bands → ndvi_s2/ndvi_landsat → ndvi_statistics chain
-    produces."""
-    seed = scene_seed(scene_id)
-    win = window_from_bounds(scene_bbox, resolution_m, read_bbox)
-    if win is None:
-        return None
-    aux_win = win if collection == "landsat-c2-l2" else s2_aux_win(
-        scene_bbox, resolution_m, read_bbox
-    )
-    total = (win[1] - win[0]) * (win[3] - win[2])
+def window_valid(seed, collection, win, aux_win) -> tuple[np.ndarray, int]:
+    """The window producer: (valid NDVI values row-major, masked count) of a
+    ``window_recipe`` — the fused C pass when loaded, else the numpy blocks.
+    The C values are a scratch view: reduce them before the next call."""
     from azure_workflow_for_kml_satellite_spark.functions import native as N
 
     if N.available():
-        values, masked = native_window_valid(seed, collection, win, aux_win)
-        if len(values) == 0:
-            return None, masked
-        return ndvi_statistics_from_values(values, total), masked
-    parts: list[np.ndarray] = []
-    masked = 0
+        return native_window_valid(seed, collection, win, aux_win)
+    parts, masked = [], 0
     for ndvi, vm, m in iter_masked_ndvi_chunks(seed, collection, win, aux_win):
         masked += m
-        vals = ndvi[vm]
-        if len(vals):
-            parts.append(vals)
-    if not parts:
-        return None, masked
-    values = parts[0] if len(parts) == 1 else np.concatenate(parts)
-    return ndvi_statistics_from_values(values, total), masked
+        parts.append(ndvi[vm])
+    return np.concatenate(parts), masked
 
 
-def change_stats(
-    ndvi_a: np.ndarray,
-    ndvi_b: np.ndarray,
-    pixel_area_ha: float,
-    loss_threshold: float = -0.1,
-    gain_threshold: float = 0.1,
-) -> dict | None:
-    """Per-pixel change metrics over jointly-finite pixels
-    (reference: change_detection.py:64-116 pure-python path)."""
-    min_h = min(ndvi_a.shape[0], ndvi_b.shape[0])
-    min_w = min(ndvi_a.shape[1], ndvi_b.shape[1])
-    ndvi_a = ndvi_a[:min_h, :min_w]
-    ndvi_b = ndvi_b[:min_h, :min_w]
-    valid = np.isfinite(ndvi_a) & np.isfinite(ndvi_b)
-    if not np.any(valid):
+def masked_ndvi_raster(seed, collection, win, aux_win) -> tuple[np.ndarray, int]:
+    """(full-window float32 NDVI raster, NaN where invalid; masked count),
+    stacked from the numpy blocks — only for outputs that ARE the raster
+    (GeoTIFF export, reprojection). Its finite pixels in row-major order are
+    exactly the window producer's values."""
+    blocks, masked = [], 0
+    for ndvi, vm, m in iter_masked_ndvi_chunks(seed, collection, win, aux_win):
+        masked += m
+        blocks.append(np.where(vm, ndvi, np.nan))
+    return np.concatenate(blocks), masked
+
+
+def pair_valid_deltas(side_a, side_b) -> np.ndarray:
+    """The pair producer: jointly-valid ``ndvi_b - ndvi_a`` deltas, row-major
+    over the top-left common shape of two ``window_recipe`` sides (the
+    reference's ``[:min_h, :min_w]`` trim, change_detection.py:64-116) — the
+    fused C pass over both sides when loaded, else both sides' numpy blocks
+    in lockstep. The C deltas are a scratch view: reduce them before the
+    next call."""
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    (seed_a, coll_a, win_a, aux_a), (seed_b, coll_b, win_b, aux_b) = side_a, side_b
+    min_h = min(win_a[1] - win_a[0], win_b[1] - win_b[0])
+    min_w = min(win_a[3] - win_a[2], win_b[3] - win_b[2])
+    if N.available():
+        buf = _scratch("nat_deltas", min_h * min_w, np.float32)
+        n = N.LIB.kmlsat_change_pair_valid(
+            *native_side_params(*side_a, min_h, min_w),
+            *native_side_params(*side_b, min_h, min_w),
+            min_h, min_w, buf.ctypes.data_as(_F32P),
+        )
+        return buf[: int(n)]
+    gb = iter_masked_ndvi_chunks(seed_b, coll_b, win_b, aux_b, min_h, min_w)
+    parts = []
+    for ndvi_a, vm_a, _ in iter_masked_ndvi_chunks(seed_a, coll_a, win_a, aux_a, min_h, min_w):
+        # the chunk arrays are scratch-backed and side b's computation will
+        # reuse the same buffers — materialize side a's masked raster block
+        # before advancing b
+        a = np.where(vm_a, ndvi_a, np.nan)
+        ndvi_b, vm_b, _ = next(gb)
+        valid = np.isfinite(a)
+        np.logical_and(valid, vm_b, out=valid)
+        np.subtract(ndvi_b, a, out=a)  # delta in the owned side-a buffer
+        parts.append(a[valid])
+    return np.concatenate(parts)
+
+
+# Why the C reducer was set aside for this process (None while it is used):
+# native.c copies numpy 1.26's pairwise-summation order, so the reducer
+# checks that precondition once before its first C call.
+NATIVE_STATS_FALLBACK: str | None = None
+_native_stats_checked = False
+
+
+def _numpy_reductions(values: np.ndarray, loss_t: float, gain_t: float):
+    """``N.stats_f32``'s tuple from numpy: (mean, std, min, max, the two
+    middle order statistics, n < loss_t, n > gain_t). Order statistics come
+    from np.sort (SIMD sort beats introselect np.partition ~1.5x on the
+    duplicate-heavy NDVI distribution, and also gives min/max)."""
+    s = np.sort(values)
+    n = len(s)
+    return (
+        np.mean(values), np.std(values), s[0], s[-1], s[(n - 1) // 2], s[n // 2],
+        int(np.sum(values < loss_t)), int(np.sum(values > gain_t)),
+    )
+
+
+def _native_stats_ok(N) -> bool:
+    global NATIVE_STATS_FALLBACK, _native_stats_checked
+    if not _native_stats_checked:
+        _native_stats_checked = True
+        # a seeded array that crosses the 8192-element reduce-chunk boundary
+        x = (np.random.default_rng(8192).standard_normal(2 * 8192 + 37) * 0.4).astype(np.float32)
+        got, want = N.stats_f32(x, -0.1, 0.1), _numpy_reductions(x, -0.1, 0.1)
+        f32 = lambda r: np.array(r[:6], np.float32).tobytes()
+        if got[6:] != want[6:] or f32(got) != f32(want):
+            NATIVE_STATS_FALLBACK = f"stats_f32 {got} != numpy {np.__version__} {want}"
+    return NATIVE_STATS_FALLBACK is None
+
+
+def reduce_valid(values: np.ndarray, loss_t: float = 0.0, gain_t: float = 0.0) -> dict | None:
+    """The reducer: rounded mean/std/min/max/median of a compacted valid
+    array plus its size ``n`` and the ``n_loss``/``n_gain`` threshold counts
+    (numpy's f32 scalar cast); None when empty (reference: ndvi.py:217-236,
+    change_detection.py:64-116). One fused C call when loaded — bitwise
+    np.mean/np.std/np.sort order statistics (native.c §stats) — else numpy."""
+    n = len(values)
+    if n == 0:
         return None
-    delta = np.where(valid, ndvi_b - ndvi_a, np.nan)
-    valid_deltas = delta[valid]
-    loss_mask = valid_deltas < loss_threshold
-    gain_mask = valid_deltas > gain_threshold
-    stable_mask = ~loss_mask & ~gain_mask
-    n_valid = int(np.sum(valid))
-    n_loss = int(np.sum(loss_mask))
-    n_gain = int(np.sum(gain_mask))
-    n_stable = int(np.sum(stable_mask))
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    if (
+        N.available()
+        and values.dtype == np.float32
+        and values.flags["C_CONTIGUOUS"]
+        and _native_stats_ok(N)
+    ):
+        r = N.stats_f32(values, loss_t, gain_t)
+    else:
+        r = _numpy_reductions(values, loss_t, gain_t)
+    mean, std, vmin, vmax, med_lo, med_hi, n_loss, n_gain = r
+    # np.median's last step: np.mean of the middle order statistic(s)
+    median = np.mean(np.array([med_lo, med_hi] if n % 2 == 0 else [med_hi], np.float32))
     return {
-        "mean_delta": round(float(np.mean(valid_deltas)), 4),
-        "median_delta": round(float(np.median(valid_deltas)), 4),
-        "std_delta": round(float(np.std(valid_deltas)), 4),
-        "min_delta": round(float(np.min(valid_deltas)), 4),
-        "max_delta": round(float(np.max(valid_deltas)), 4),
-        "loss_ha": round(n_loss * pixel_area_ha, 2),
-        "gain_ha": round(n_gain * pixel_area_ha, 2),
-        "stable_ha": round(n_stable * pixel_area_ha, 2),
-        "total_ha": round(n_valid * pixel_area_ha, 2),
-        "loss_pct": round(n_loss / n_valid * 100, 1) if n_valid else 0.0,
-        "gain_pct": round(n_gain / n_valid * 100, 1) if n_valid else 0.0,
-        "valid_pixels": n_valid,
+        "mean": round(float(mean), 4),
+        "min": round(float(vmin), 4),
+        "max": round(float(vmax), 4),
+        "std": round(float(std), 4),
+        "median": round(float(median), 4),
+        "n": n,
+        "n_loss": n_loss,
+        "n_gain": n_gain,
     }
 
 
@@ -846,24 +698,3 @@ def reproject_bilinear(
     )
     out[~inside] = np.nan
     return out
-
-
-# ── raster codec (GeoTIFF stand-in) ─────────────────────────────────────────
-
-_MAGIC = b"KSR1"
-
-
-def pack_raster(arr: np.ndarray, pixel_size_m: float) -> bytes:
-    """Serialize a float32 raster + pixel size; zlib-compressed (plays the
-    deflate float32 GeoTIFF role, reference: ndvi.py:239-255)."""
-    a = np.ascontiguousarray(arr, dtype=np.float32)
-    header = struct.pack("<4sIId", _MAGIC, a.shape[0], a.shape[1], float(pixel_size_m))
-    return header + zlib.compress(a.tobytes(), 6)
-
-
-def unpack_raster(data: bytes) -> tuple[np.ndarray, float]:
-    magic, h, w, px = struct.unpack_from("<4sIId", data, 0)
-    if magic != _MAGIC:
-        raise ValueError("bad raster magic")
-    raw = zlib.decompress(data[struct.calcsize("<4sIId"):])
-    return np.frombuffer(raw, dtype=np.float32).reshape(h, w), px

@@ -27,21 +27,6 @@ from azure_workflow_for_kml_satellite_spark.constants import (
 )
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
 
-# Columns that let the UDF regenerate one frame's masked NDVI raster.
-_RECIPE = [
-    "scene_id",
-    "s_min_lon",
-    "s_min_lat",
-    "s_max_lon",
-    "s_max_lat",
-    "resolution_m",
-    "ndvi_collection",
-    "min_lon",
-    "min_lat",
-    "max_lon",
-    "max_lat",
-]
-
 _CHANGE_FIELDS = [
     T.StructField("mean_delta", T.DoubleType(), True),
     T.StructField("median_delta", T.DoubleType(), True),
@@ -58,169 +43,44 @@ _CHANGE_FIELDS = [
 ]
 
 
-def masked_ndvi_for_recipe(rec: dict, prefix: str = "") -> tuple[np.ndarray, float] | None:
-    """Regenerate the frame's masked NDVI raster (NaN outside valid) exactly
-    as the NDVI stage wrote it (operators/ndvi.py; reference ndvi.py:239-241)."""
-    p = lambda c: rec[prefix + c] if prefix else rec[c]
-    scene_bbox = [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")]
-    read_bbox = [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")]
-    collection = p("ndvi_collection")
-    bands = R.read_window_bands(
-        p("scene_id"), scene_bbox, p("resolution_m"), read_bbox, collection
-    )
-    if bands is None:
-        return None
-    if collection == "landsat-c2-l2":
-        ndvi, mask, _ = R.ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
-    else:
-        ndvi, mask, _ = R.ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
-    if not np.any(mask):
-        return None
-    return np.where(mask, ndvi, np.nan).astype(np.float32), float(p("resolution_m"))
-
-
-def _recipe_windows(rec: dict, prefix: str):
-    """(seed, collection, win, aux_win, resolution_m) for one side of a pair,
-    or None when the read window is empty (the ``bands is None`` case)."""
-    p = lambda c: rec[prefix + c]
-    scene_bbox = [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")]
-    read_bbox = [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")]
-    res = p("resolution_m")
-    win = R.window_from_bounds(scene_bbox, res, read_bbox)
-    if win is None:
-        return None
-    collection = p("ndvi_collection")
-    aux_win = win if collection == "landsat-c2-l2" else R.s2_aux_win(
-        scene_bbox, res, read_bbox
-    )
-    return R.scene_seed(p("scene_id")), collection, win, aux_win, float(res)
-
-
-def _native_pair_deltas(
-    seed_a, coll_a, win_a, aux_a, seed_b, coll_b, win_b, aux_b, min_h, min_w
-) -> np.ndarray:
-    """Jointly-valid deltas via the fused C pair kernel — a scratch view,
-    consumed by the reductions in the caller before any further call."""
-    import ctypes
-
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    ka, ar0, ac0, aar0, aac0, ari, aci, as1000 = R.native_side_params(
-        seed_a, coll_a, win_a, aux_a, min_h, min_w
-    )
-    kb, br0, bc0, bar0, bac0, bri, bci, bs1000 = R.native_side_params(
-        seed_b, coll_b, win_b, aux_b, min_h, min_w
-    )
-    buf = R._scratch("nat_deltas", min_h * min_w, np.float32)
-    n = N.LIB.kmlsat_change_pair_valid(
-        int(seed_a) & 0xFFFFFFFF, ka, ar0, ac0, aar0, aac0,
-        R._i64p(ari), R._i64p(aci), as1000,
-        int(seed_b) & 0xFFFFFFFF, kb, br0, bc0, bar0, bac0,
-        R._i64p(bri), R._i64p(bci), bs1000,
-        min_h, min_w,
-        buf.ctypes.data_as(ctypes.POINTER(ctypes.c_float)),
-    )
-    return buf[: int(n)]
-
-
-def change_stats_for_pair_blocked(
-    rec: dict,
-    loss_threshold: float,
-    gain_threshold: float,
+def change_columns(
+    deltas: np.ndarray, resolution_m: float, loss_threshold: float, gain_threshold: float
 ) -> dict | None:
-    """Cache-blocked equivalent of masked_ndvi_for_recipe(a/b) +
-    R.change_stats: both sides' NDVI chunks are regenerated block-by-block
-    over the trimmed common shape and the delta compacted per block, so no
-    full-window raster ever materializes. Bit-identical: band pixels are
-    window-placement pure, the delta/selection ops elementwise, and the
-    concatenated valid-delta array equals the full path's ``delta[valid]``
-    (rows skipped by either path are skipped by both — an all-invalid side
-    and an empty joint-valid set both yield None)."""
-    wa = _recipe_windows(rec, "a_")
-    wb = _recipe_windows(rec, "b_")
-    if wa is None or wb is None:
+    """The change result builder: this operator's change columns from a
+    pair's compacted jointly-valid deltas, None when there are none
+    (reference: change_detection.py:64-116; pixel area from raster a,
+    change_detection.py:59,70-71)."""
+    st = R.reduce_valid(deltas, loss_threshold, gain_threshold)
+    if st is None:
         return None
-    seed_a, coll_a, win_a, aux_a, res_a = wa
-    seed_b, coll_b, win_b, aux_b, _res_b = wb
-    min_h = min(win_a[1] - win_a[0], win_b[1] - win_b[0])
-    min_w = min(win_a[3] - win_a[2], win_b[3] - win_b[2])
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    if N.available():
-        # fused C pass over both sides (functions/native.c): the compacted
-        # delta array equals the blocked path's concatenation bit-for-bit,
-        # and the fused C reductions are bitwise np.mean/np.std/np.sort
-        # order statistics / f32-cast threshold counts (native.c §stats;
-        # pinned in tests/test_native_kernels.py)
-        valid_deltas = _native_pair_deltas(
-            seed_a, coll_a, win_a, aux_a, seed_b, coll_b, win_b, aux_b,
-            min_h, min_w,
-        )
-        n_valid = len(valid_deltas)
-        if n_valid == 0:
-            return None
-        mean_d, std_d, min_d, max_d, med_lo, med_hi, n_loss, n_gain = N.stats_f32(
-            valid_deltas, loss_threshold, gain_threshold
-        )
-        res_a_ha = abs(res_a * res_a) / 10_000
-        n_stable = n_valid - n_loss - n_gain
-        return {
-            "mean_delta": round(mean_d, 4),
-            "median_delta": round(float(R._median_of_pair(med_lo, med_hi, n_valid)), 4),
-            "std_delta": round(std_d, 4),
-            "min_delta": round(min_d, 4),
-            "max_delta": round(max_d, 4),
-            "loss_ha": round(n_loss * res_a_ha, 2),
-            "gain_ha": round(n_gain * res_a_ha, 2),
-            "stable_ha": round(n_stable * res_a_ha, 2),
-            "total_ha": round(n_valid * res_a_ha, 2),
-            "loss_pct": round(n_loss / n_valid * 100, 1) if n_valid else 0.0,
-            "gain_pct": round(n_gain / n_valid * 100, 1) if n_valid else 0.0,
-            "valid_pixels": n_valid,
-        }
-    else:
-        ga = R.iter_masked_ndvi_chunks(seed_a, coll_a, win_a, aux_a, min_h, min_w)
-        gb = R.iter_masked_ndvi_chunks(seed_b, coll_b, win_b, aux_b, min_h, min_w)
-        parts: list[np.ndarray] = []
-        n_valid = n_loss = n_gain = 0
-        for ndvi_a, vm_a, _ in ga:
-            # the chunk arrays are scratch-backed and side b's computation
-            # will reuse the same buffers — materialize side a as its masked
-            # raster (exactly the array the full path builds) before
-            # advancing b
-            a = np.where(vm_a, ndvi_a, np.nan)
-            ndvi_b, vm_b, _ = next(gb)
-            valid = np.isfinite(a)
-            np.logical_and(valid, vm_b, out=valid)
-            if not valid.any():
-                continue
-            np.subtract(ndvi_b, a, out=a)  # delta in the owned side-a buffer
-            vals = a[valid]
-            n = len(vals)
-            n_valid += n
-            n_loss += int(np.sum(vals < loss_threshold))
-            n_gain += int(np.sum(vals > gain_threshold))
-            parts.append(vals)
-        if n_valid == 0:
-            return None
-        valid_deltas = parts[0] if len(parts) == 1 else np.concatenate(parts)
-    pixel_area_ha = abs(res_a * res_a) / 10_000
-    n_stable = n_valid - n_loss - n_gain
-    s = np.sort(valid_deltas)  # order statistics: median/min/max (raster.py)
+    pixel_area_ha = abs(resolution_m * resolution_m) / 10_000
+    n, n_loss, n_gain = st["n"], st["n_loss"], st["n_gain"]
     return {
-        "mean_delta": round(float(np.mean(valid_deltas)), 4),
-        "median_delta": round(float(R._median_sorted(s)), 4),
-        "std_delta": round(float(np.std(valid_deltas)), 4),
-        "min_delta": round(float(s[0]), 4),
-        "max_delta": round(float(s[-1]), 4),
+        "mean_delta": st["mean"],
+        "median_delta": st["median"],
+        "std_delta": st["std"],
+        "min_delta": st["min"],
+        "max_delta": st["max"],
         "loss_ha": round(n_loss * pixel_area_ha, 2),
         "gain_ha": round(n_gain * pixel_area_ha, 2),
-        "stable_ha": round(n_stable * pixel_area_ha, 2),
-        "total_ha": round(n_valid * pixel_area_ha, 2),
-        "loss_pct": round(n_loss / n_valid * 100, 1) if n_valid else 0.0,
-        "gain_pct": round(n_gain / n_valid * 100, 1) if n_valid else 0.0,
-        "valid_pixels": n_valid,
+        "stable_ha": round((n - n_loss - n_gain) * pixel_area_ha, 2),
+        "total_ha": round(n * pixel_area_ha, 2),
+        "loss_pct": round(n_loss / n * 100, 1),
+        "gain_pct": round(n_gain / n * 100, 1),
+        "valid_change_pixels": n,
     }
+
+
+def change_for_pair(rec: dict, loss_threshold: float, gain_threshold: float) -> dict | None:
+    """Change columns for one ``a_``/``b_`` recipe row, None when either
+    read window is empty or no pixel is valid in both rasters. Both sides'
+    NDVI is regenerated over the trimmed common shape and only the valid
+    deltas are kept — no full-window raster materializes."""
+    sides = R.window_recipe(rec, "a_"), R.window_recipe(rec, "b_")
+    if None in sides:
+        return None
+    deltas = R.pair_valid_deltas(*sides)
+    return change_columns(deltas, float(rec["a_resolution_m"]), loss_threshold, gain_threshold)
 
 
 def season_changes(
@@ -237,7 +97,7 @@ def season_changes(
     par = ndvi_df.sparkSession.sparkContext.defaultParallelism
     has_stat = (
         ndvi_df.filter(F.col("ndvi_mean").isNotNull())
-        .select("url", "feature_index", "season", "year", *_RECIPE)
+        .select("url", "feature_index", "season", "year", *R.RECIPE_COLUMNS)
         .coalesce(par)
     )
     w = Window.partitionBy("url", "feature_index", "season").orderBy("year")
@@ -247,8 +107,8 @@ def season_changes(
         "season",
         F.lag("year").over(w).alias("year_from"),
         F.col("year").alias("year_to"),
-        *[F.lag(c).over(w).alias(f"a_{c}") for c in _RECIPE],
-        *[F.col(c).alias(f"b_{c}") for c in _RECIPE],
+        *[F.lag(c).over(w).alias(f"a_{c}") for c in R.RECIPE_COLUMNS],
+        *[F.col(c).alias(f"b_{c}") for c in R.RECIPE_COLUMNS],
     ).filter(F.col("year_from").isNotNull())
     # The window shuffle clumps one AOI's (heavy) pairs into one partition;
     # pair recompute cost varies 4 orders of magnitude (monster 200px² vs
@@ -256,13 +116,10 @@ def season_changes(
     # grain + key-hash, same policy the round-5 profile study picked for
     # the NDVI stage (BASELINE.md): hash on the full pair key declusters
     # same-AOI runs (measured 29.9 s vs 35-40 s round-robin at sf0.1).
-    # Multiplier env-tunable (SPARK_GRAFT_CHANGE_GRAIN_X) — re-swept after
-    # the round-8 shuffle-writer fix changed per-task costs.
-    import os
-
-    _grain_x = int(os.environ.get("SPARK_GRAFT_CHANGE_GRAIN_X", "8"))
+    # The 8x multiplier was re-swept after the round-8 shuffle-writer fix
+    # changed per-task costs.
     paired = paired.repartition(
-        max(64, _grain_x * ndvi_df.sparkSession.sparkContext.defaultParallelism),
+        max(64, 8 * ndvi_df.sparkSession.sparkContext.defaultParallelism),
         F.col("url"), F.col("feature_index"), F.col("season"), F.col("year_to"),
     )
 
@@ -278,33 +135,14 @@ def season_changes(
         for pdf in batches:
             rows = []
             for rec in pdf.to_dict("records"):
-                # pixel area comes from raster a inside the blocked evaluator
-                # (reference: change_detection.py:59,70-71)
-                stats = change_stats_for_pair_blocked(
-                    rec, loss_threshold, gain_threshold
-                )
+                stats = change_for_pair(rec, loss_threshold, gain_threshold)
                 if stats is None:
                     continue
                 row = {k: rec[k] for k in key_cols}
                 season = rec["season"]
                 # reference: change_detection.py:235
                 row["label"] = f"{season.capitalize()} {rec['year_from']} → {rec['year_to']}"
-                row.update(
-                    {
-                        "mean_delta": stats["mean_delta"],
-                        "median_delta": stats["median_delta"],
-                        "std_delta": stats["std_delta"],
-                        "min_delta": stats["min_delta"],
-                        "max_delta": stats["max_delta"],
-                        "loss_ha": stats["loss_ha"],
-                        "gain_ha": stats["gain_ha"],
-                        "stable_ha": stats["stable_ha"],
-                        "total_ha": stats["total_ha"],
-                        "loss_pct": stats["loss_pct"],
-                        "gain_pct": stats["gain_pct"],
-                        "valid_change_pixels": stats["valid_pixels"],
-                    }
-                )
+                row.update(stats)
                 rows.append(row)
             yield pd.DataFrame(rows, columns=out_cols) if rows else pd.DataFrame(
                 columns=out_cols

@@ -3,19 +3,21 @@
 ``mapInPandas`` over the spatial-join output: each row independently performs
 a windowed band read of its scene (deterministic synthetic provider — the
 COG-windowed-read role, reference: ndvi.py:463-484), runs the reference's
-exact numpy NDVI + masking kernels (ndvi.py:189-236 for S2 incl. SCL
-nearest-neighbour resample; ndvi.py:372-447 for Landsat QA_PIXEL), and emits
-the rounded statistics struct.
+exact NDVI + masking kernels (ndvi.py:189-236 for S2 incl. SCL
+nearest-neighbour resample; ndvi.py:372-447 for Landsat QA_PIXEL) through
+the raster.py window producer and reducer, and emits the rounded statistics.
 
-Parity note (SURVEY.md §7.4 risk 1): each group's stats are computed inside
-ONE udf call on the full window array — float32 reduction order is fixed and
-identical to the sequential oracle, never a distributed aggregation.
+Parity note (SURVEY.md §7.4 risk 1): each row's stats are reduced inside
+ONE udf call over the window's whole valid array — float32 reduction order
+is fixed and identical to the sequential oracle, never a distributed
+aggregation.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -35,92 +37,54 @@ _STAT_FIELDS = [
 ]
 
 
+def ndvi_columns(values, total_pixels: int, masked: int) -> dict:
+    """The NDVI-stats result builder: this operator's stat columns from a
+    window's compacted valid values; empty when no pixel is valid (the
+    reference returns None → frame has no stat, ndvi.py:219-221)."""
+    st = R.reduce_valid(values)
+    if st is None:
+        return {}
+    return {
+        "ndvi_mean": st["mean"],
+        "ndvi_min": st["min"],
+        "ndvi_max": st["max"],
+        "ndvi_std": st["std"],
+        "ndvi_median": st["median"],
+        "valid_pixels": st["n"],
+        "total_pixels": total_pixels,
+        "masked_pixels": masked,
+    }
+
+
 def compute_ndvi_for_row(rec: dict, include_raster: bool = False) -> dict:
     """Band read + NDVI kernel for one (aoi, frame, scene) row.
 
     Read window = the AOI bbox (per-AOI enrichment semantics,
     reference: runner.py:488-572); scene search already used the buffered
-    bbox. Returns null stats when the window is empty or no valid pixels
-    (reference returns None → frame has no stat, ndvi.py:219-221).
+    bbox. Returns null stats when the window is empty or no valid pixels.
     """
-    read_bbox = [rec["min_lon"], rec["min_lat"], rec["max_lon"], rec["max_lat"]]
-    scene_bbox = [rec["s_min_lon"], rec["s_min_lat"], rec["s_max_lon"], rec["s_max_lat"]]
-    collection = rec["ndvi_collection"]
-    out = {
-        "ndvi_mean": None,
-        "ndvi_min": None,
-        "ndvi_max": None,
-        "ndvi_std": None,
-        "ndvi_median": None,
-        "valid_pixels": None,
-        "total_pixels": None,
-        "masked_pixels": None,
-        "ndvi_raster": None,
-    }
+    out = {f.name: None for f in _STAT_FIELDS}
+    recipe = R.window_recipe(rec)
+    if recipe is None:
+        return out
+    win = recipe[2]
+    total = (win[1] - win[0]) * (win[3] - win[2])
     if not include_raster:
-        # stats-only rows run the cache-blocked evaluator (bit-identical
-        # values; ~6x on monster windows — see raster.py blocked section)
-        res = R.ndvi_window_stats_blocked(
-            rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, collection
-        )
-        if res is None:
-            return out
-        stats, masked = res
-        if stats is None:
-            return out
-        out.update(
-            {
-                "ndvi_mean": stats["mean"],
-                "ndvi_min": stats["min"],
-                "ndvi_max": stats["max"],
-                "ndvi_std": stats["std"],
-                "ndvi_median": stats["median"],
-                "valid_pixels": stats["valid_pixels"],
-                "total_pixels": stats["total_pixels"],
-                "masked_pixels": masked,
-            }
-        )
+        values, masked = R.window_valid(*recipe)
+        out.update(ndvi_columns(values, total, masked))
         return out
-    bands = R.read_window_bands(
-        rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, collection
-    )
-    if bands is None:
-        return out
-    if collection == "landsat-c2-l2":
-        ndvi, mask, masked = R.ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
-    else:
-        ndvi, mask, masked = R.ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
-    stats = R.ndvi_statistics(ndvi, mask)
-    if stats is None:
-        return out
-    out.update(
-        {
-            "ndvi_mean": stats["mean"],
-            "ndvi_min": stats["min"],
-            "ndvi_max": stats["max"],
-            "ndvi_std": stats["std"],
-            "ndvi_median": stats["median"],
-            "valid_pixels": stats["valid_pixels"],
-            "total_pixels": stats["total_pixels"],
-            "masked_pixels": masked,
-        }
-    )
-    if include_raster:
-        import numpy as np
+    from azure_workflow_for_kml_satellite_spark.functions.geotiff import write_geotiff_f32
 
-        from azure_workflow_for_kml_satellite_spark.functions.geotiff import (
-            write_geotiff_f32,
-        )
-
+    raster, masked = R.masked_ndvi_raster(*recipe)
+    out.update(ndvi_columns(raster[np.isfinite(raster)], raster.size, masked))
+    if out["ndvi_mean"] is not None:
         # masked float32 GeoTIFF, NaN nodata, deflate — the reference's NDVI
         # export artifact byte-for-byte in role (enrichment/ndvi.py:239-255)
-        ndvi_masked = np.where(mask, ndvi, np.nan)
-        win = R.window_from_bounds(scene_bbox, rec["resolution_m"], read_bbox)
         px = rec["resolution_m"] * R.DEG_PER_METRE
         out["ndvi_raster"] = write_geotiff_f32(
-            ndvi_masked,
-            west=scene_bbox[0] + win[2] * px,
-            north=scene_bbox[3] - win[0] * px,
+            raster,
+            west=rec["s_min_lon"] + win[2] * px,
+            north=rec["s_max_lat"] - win[0] * px,
             px_x=px,
             px_y=px,
         )
@@ -151,8 +115,6 @@ def compute_ndvi_utm_row(rec: dict) -> dict:
     reprojects outputs back): G4 bbox transform → metric windowed read →
     S2 NDVI kernel → R5 bilinear warp of the masked NDVI back onto the
     AOI's geographic bbox."""
-    import numpy as np
-
     from azure_workflow_for_kml_satellite_spark.functions.geometry import (
         transform_bbox,
     )
@@ -168,20 +130,16 @@ def compute_ndvi_utm_row(rec: dict) -> dict:
     out.update(
         {"win_row0": win[0], "win_row1": win[1], "win_col0": win[2], "win_col1": win[3]}
     )
-    bands = R.read_window_bands_utm(rec["scene_id"], scene_bbox_m, res, ubox)
-    ndvi, mask, masked = R.ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
-    stats = R.ndvi_statistics(ndvi, mask)
-    if stats is None:
-        return out
-    out.update(
-        {
-            "ndvi_mean": stats["mean"],
-            "ndvi_median": stats["median"],
-            "valid_pixels": stats["valid_pixels"],
-            "total_pixels": stats["total_pixels"],
-            "masked_pixels": masked,
-        }
+    raster, masked = R.masked_ndvi_raster(
+        R.scene_seed(rec["scene_id"] + ":utm"),
+        "sentinel-2-l2a",
+        win,
+        R.window_from_bounds_m(scene_bbox_m, res * 2, ubox),
     )
+    st = ndvi_columns(raster[np.isfinite(raster)], raster.size, masked)
+    if not st:
+        return out
+    out.update({k: v for k, v in st.items() if k in out})
     # R5: warp the masked NDVI from the scene's UTM window grid back onto
     # the AOI's geographic bbox (fixed display shape)
     win_bbox_m = [
@@ -190,9 +148,8 @@ def compute_ndvi_utm_row(rec: dict) -> dict:
         scene_bbox_m[0] + win[3] * res,
         scene_bbox_m[3] - win[0] * res,
     ]
-    ndvi_masked = np.where(mask, ndvi, np.nan).astype(np.float32)
     warped = R.reproject_bilinear(
-        ndvi_masked,
+        raster,
         win_bbox_m,
         read_bbox,
         _REPROJ_SHAPE,
@@ -207,56 +164,43 @@ def compute_ndvi_utm_row(rec: dict) -> dict:
     return out
 
 
+def _append_row_columns(df: DataFrame, fields, needed: list[str], row_fn) -> DataFrame:
+    """Append ``fields`` computed by ``row_fn`` over the ``needed`` columns of
+    each row. Column-wise inner loop (no per-row dict materialization of the
+    whole batch): profiling showed row-dict conversion dominating over the
+    pixel math itself."""
+    schema = T.StructType(list(df.schema.fields) + fields)
+    stat_names = [f.name for f in fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out_cols: dict[str, list] = {n: [] for n in stat_names}
+            for vals in zip(*(pdf[c].values for c in needed)):
+                st = row_fn(dict(zip(needed, vals)))
+                for n in stat_names:
+                    out_cols[n].append(st[n])
+            out = pdf.copy()
+            for n in stat_names:
+                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
+            yield out
+
+    return df.mapInPandas(run, schema)
+
+
 def ndvi_stats_utm(best_utm: DataFrame) -> DataFrame:
-    """Append cross-CRS NDVI + reprojection columns (same column-wise
-    mapInPandas shape as ndvi_stats)."""
-    schema = T.StructType(list(best_utm.schema.fields) + _UTM_STAT_FIELDS)
-    stat_names = [f.name for f in _UTM_STAT_FIELDS]
+    """Append cross-CRS NDVI + reprojection columns."""
     needed = [
         "scene_id", "epsg", "u_min_e", "u_min_n", "u_max_e", "u_max_n", "u_res_m",
         "min_lon", "min_lat", "max_lon", "max_lat",
     ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols: dict[str, list] = {n: [] for n in stat_names}
-            for vals in zip(*(pdf[c].values for c in needed)):
-                rec = dict(zip(needed, vals))
-                st = compute_ndvi_utm_row(rec)
-                for n in stat_names:
-                    out_cols[n].append(st[n])
-            out = pdf.copy()
-            for n in stat_names:
-                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
-            yield out
-
-    return best_utm.mapInPandas(run, schema)
+    return _append_row_columns(best_utm, _UTM_STAT_FIELDS, needed, compute_ndvi_utm_row)
 
 
 def ndvi_stats(best_scenes: DataFrame, include_raster: bool = False) -> DataFrame:
-    """Append NDVI statistic columns to the (aoi, frame, best scene) rows.
-
-    Column-wise inner loop (no per-row dict materialization): the stats are
-    appended to the incoming Arrow batch as new columns — profiling showed
-    row-dict conversion dominating over the pixel math itself."""
-    schema = T.StructType(list(best_scenes.schema.fields) + _STAT_FIELDS)
-    stat_names = [f.name for f in _STAT_FIELDS]
-    needed = [
-        "scene_id", "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
-        "resolution_m", "ndvi_collection", "min_lon", "min_lat", "max_lon", "max_lat",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols: dict[str, list] = {n: [] for n in stat_names}
-            for vals in zip(*(pdf[c].values for c in needed)):
-                rec = dict(zip(needed, vals))
-                st = compute_ndvi_for_row(rec, include_raster)
-                for n in stat_names:
-                    out_cols[n].append(st[n])
-            out = pdf.copy()
-            for n in stat_names:
-                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
-            yield out
-
-    return best_scenes.mapInPandas(run, schema)
+    """Append NDVI statistic columns to the (aoi, frame, best scene) rows."""
+    return _append_row_columns(
+        best_scenes,
+        _STAT_FIELDS,
+        R.RECIPE_COLUMNS,
+        lambda rec: compute_ndvi_for_row(rec, include_raster),
+    )

@@ -1136,7 +1136,7 @@ def clamp_window_m(scene_bbox_m, resolution_m, read_bbox_m):
 
 
 def fetch_window_bands_utm(scene_id, scene_bbox_m, resolution_m, read_bbox_m):
-    """UTM-grid sentinel windowed read (contract: raster.read_window_bands_utm;
+    """UTM-grid sentinel windowed read (contract: ndvi.compute_ndvi_utm_row;
     seed salted with ':utm' — distinct raster content from the geographic
     variant)."""
     seed = seed_of(scene_id + ":utm")

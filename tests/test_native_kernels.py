@@ -1,14 +1,15 @@
 """Differential pin: fused C kernels (functions/native.c) vs the numpy path.
 
-The native kernels must be bit-identical to the numpy blocked evaluators —
-same compacted value arrays (row-major), same masked counts — across
-collections, window shapes, trims and the no-aux edge case. The numpy path
-stays in the tree as both fallback and oracle; these tests force it via a
-temporary ``native.LIB = None`` where needed.
+The window producer, the pair producer and the reducer in functions/raster.py
+must be bit-identical with the library loaded and under a forced
+``native.LIB = None`` — same compacted value arrays (row-major), same masked
+counts, same reductions — across collections, window shapes, trims and the
+no-aux edge case.
 """
 
 from __future__ import annotations
 
+import contextlib
 import sys
 from pathlib import Path
 
@@ -21,21 +22,26 @@ sys.path.insert(0, str(REPO))
 from azure_workflow_for_kml_satellite_spark.functions import native as N  # noqa: E402
 from azure_workflow_for_kml_satellite_spark.functions import raster as R  # noqa: E402
 from azure_workflow_for_kml_satellite_spark.operators import change as C  # noqa: E402
+from azure_workflow_for_kml_satellite_spark.operators import ndvi as ND  # noqa: E402
 
 pytestmark = pytest.mark.skipif(
     not N.available(), reason="native kernels unavailable (no gcc?)"
 )
 
 
+@contextlib.contextmanager
+def _numpy_only():
+    lib = N.LIB
+    N.LIB = None
+    try:
+        yield
+    finally:
+        N.LIB = lib
+
+
 def _numpy_window(seed, coll, win, aux):
-    parts, masked = [], 0
-    for ndvi, vm, m in R.iter_masked_ndvi_chunks(seed, coll, win, aux):
-        masked += m
-        v = ndvi[vm]
-        if len(v):
-            parts.append(v.copy())
-    vals = np.concatenate(parts) if parts else np.empty(0, np.float32)
-    return vals, masked
+    with _numpy_only():
+        return R.window_valid(seed, coll, win, aux)
 
 
 def _random_case(rng, trial):
@@ -62,7 +68,7 @@ def test_window_kernel_bit_identical():
     for trial in range(300):
         seed, coll, win, aux = _random_case(rng, trial)
         vals_np, masked_np = _numpy_window(seed, coll, win, aux)
-        vals_c, masked_c = R.native_window_valid(seed, coll, win, aux)
+        vals_c, masked_c = R.window_valid(seed, coll, win, aux)
         assert masked_np == masked_c, (trial, coll, win)
         assert np.array_equal(vals_np, vals_c), (trial, coll, win)
 
@@ -78,35 +84,18 @@ def test_monster_window_bit_identical():
 def test_change_pair_bit_identical():
     rng = np.random.default_rng(99)
     for trial in range(200):
-        sides = []
-        for k in range(2):
-            seed, coll, win, aux = _random_case(rng, trial + k)
-            sides.append((seed, coll, win, aux))
-        (sa, ca, wa, aa), (sb, cb, wb, ab) = sides
-        min_h = min(wa[1] - wa[0], wb[1] - wb[0])
-        min_w = min(wa[3] - wa[2], wb[3] - wb[2])
-        # numpy blocked reference (the change operator's fallback loop)
-        ga = R.iter_masked_ndvi_chunks(sa, ca, wa, aa, min_h, min_w)
-        gb = R.iter_masked_ndvi_chunks(sb, cb, wb, ab, min_h, min_w)
-        parts = []
-        for ndvi_a, vm_a, _ in ga:
-            a = np.where(vm_a, ndvi_a, np.nan)
-            ndvi_b, vm_b, _ = next(gb)
-            valid = np.isfinite(a) & vm_b
-            if not valid.any():
-                continue
-            d = ndvi_b - a
-            parts.append(d[valid].astype(np.float32))
-        vals_np = np.concatenate(parts) if parts else np.empty(0, np.float32)
-        vals_c = C._native_pair_deltas(sa, ca, wa, aa, sb, cb, wb, ab, min_h, min_w)
+        sides = [_random_case(rng, trial + k) for k in range(2)]
+        with _numpy_only():
+            vals_np = R.pair_valid_deltas(*sides)
+        vals_c = R.pair_valid_deltas(*sides)
         assert np.array_equal(vals_np, vals_c), (trial, sides)
 
 
 def test_stats_entrypoint_matches_forced_numpy():
-    """ndvi_window_stats_blocked must produce identical stats dicts with
-    the native path on and off (the operator-level contract)."""
+    """The NDVI row must produce identical column dicts with the native
+    path on and off (the operator-level contract)."""
     rng = np.random.default_rng(5)
-    cases = []
+    rows = []
     for trial in range(40):
         lon0 = float(rng.uniform(-170, 160))
         lat0 = float(rng.uniform(-80, 70))
@@ -115,21 +104,17 @@ def test_stats_entrypoint_matches_forced_numpy():
         coll = ["sentinel-2-l2a", "landsat-c2-l2"][trial % 2]
         scene = [lon0 - 0.05, lat0 - 0.05, lon0 + 0.2, lat0 + 0.2]
         read = [lon0, lat0, lon0 + dl, lat0 + dl]
-        cases.append((f"scene-{trial}", scene, res, read, coll))
-    native_out = [R.ndvi_window_stats_blocked(*c) for c in cases]
-    lib = N.LIB
-    try:
-        N.LIB = None
-        numpy_out = [R.ndvi_window_stats_blocked(*c) for c in cases]
-    finally:
-        N.LIB = lib
+        rows.append(dict(zip(R.RECIPE_COLUMNS, [f"scene-{trial}", *scene, res, coll, *read])))
+    native_out = [ND.compute_ndvi_for_row(r) for r in rows]
+    with _numpy_only():
+        numpy_out = [ND.compute_ndvi_for_row(r) for r in rows]
     assert native_out == numpy_out
 
 
-def test_change_stats_entrypoint_matches_forced_numpy():
-    rng = np.random.default_rng(6)
+def _pair_rows(seed, n):
+    rng = np.random.default_rng(seed)
     rows = []
-    for trial in range(30):
+    for trial in range(n):
         rec = {}
         for p in ("a_", "b_"):
             lon0 = float(rng.uniform(-170, 160))
@@ -145,14 +130,35 @@ def test_change_stats_entrypoint_matches_forced_numpy():
                 p + "max_lon": lon0 + dl, p + "max_lat": lat0 + dl,
             })
         rows.append(rec)
-    native_out = [C.change_stats_for_pair_blocked(r, -0.1, 0.1) for r in rows]
-    lib = N.LIB
-    try:
-        N.LIB = None
-        numpy_out = [C.change_stats_for_pair_blocked(r, -0.1, 0.1) for r in rows]
-    finally:
-        N.LIB = lib
+    return rows
+
+
+def test_change_stats_entrypoint_matches_forced_numpy():
+    rows = _pair_rows(6, 30)
+    native_out = [C.change_for_pair(r, -0.1, 0.1) for r in rows]
+    with _numpy_only():
+        numpy_out = [C.change_for_pair(r, -0.1, 0.1) for r in rows]
     assert native_out == numpy_out
+
+
+def test_reducer_steps_aside_when_stats_f32_disagrees(monkeypatch):
+    """A C reducer that no longer matches numpy's summation order (another
+    numpy build, say) is caught by the reducer's first-use check: the flag
+    records why, and every result stays the numpy result."""
+    rows = _pair_rows(7, 12)
+    want = [C.change_for_pair(r, -0.1, 0.1) for r in rows]
+    good = N.stats_f32
+
+    def shifted_mean(arr, loss_t=0.0, gain_t=0.0):
+        mean, *rest = good(arr, loss_t, gain_t)
+        return (mean + 1e-3, *rest)  # would move every rounded mean_delta
+
+    monkeypatch.setattr(N, "stats_f32", shifted_mean)
+    monkeypatch.setattr(R, "_native_stats_checked", False)
+    monkeypatch.setattr(R, "NATIVE_STATS_FALLBACK", None)
+    got = [C.change_for_pair(r, -0.1, 0.1) for r in rows]
+    assert R.NATIVE_STATS_FALLBACK is not None and "stats_f32" in R.NATIVE_STATS_FALLBACK
+    assert got == want
 
 
 def _np_stats_ref(x, lt, gt):
@@ -222,23 +228,19 @@ def test_stats_f32_threshold_boundary_cast():
 
 
 def test_stats_entry_values_native_vs_numpy_unrounded():
-    """ndvi_statistics_from_values: native and forced-numpy paths agree on
-    real kernel value arrays (the rounded dict AND the raw C floats vs the
-    raw numpy reductions — the stricter check)."""
+    """The reducer: native and forced-numpy paths agree on real kernel
+    value arrays (the rounded dict AND the raw C floats vs the raw numpy
+    reductions — the stricter check)."""
     rng = np.random.default_rng(1003)
-    lib = N.LIB
     for trial in range(60):
         seed, coll, win, aux = _random_case(rng, trial)
         vals, _ = _numpy_window(seed, coll, win, aux)
         if len(vals) == 0:
             continue
         assert _c_stats(vals, -0.1, 0.1) == _np_stats_ref(vals, -0.1, 0.1)
-        d_native = R.ndvi_statistics_from_values(vals, vals.size)
-        try:
-            N.LIB = None
-            d_numpy = R.ndvi_statistics_from_values(vals, vals.size)
-        finally:
-            N.LIB = lib
+        d_native = R.reduce_valid(vals, -0.1, 0.1)
+        with _numpy_only():
+            d_numpy = R.reduce_valid(vals, -0.1, 0.1)
         assert d_native == d_numpy, (trial, d_native, d_numpy)
 
 

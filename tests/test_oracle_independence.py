@@ -14,6 +14,8 @@ from azure_workflow_for_kml_satellite_spark.functions import geometry as geo
 from azure_workflow_for_kml_satellite_spark.functions import kml as kml_fn
 from azure_workflow_for_kml_satellite_spark.functions import metrics as M
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
+from azure_workflow_for_kml_satellite_spark.operators import change as C
+from azure_workflow_for_kml_satellite_spark.operators import ndvi as ND
 from azure_workflow_for_kml_satellite_spark.oracle import kernels as K
 
 RNG = random.Random(0xC0FFEE)
@@ -77,27 +79,47 @@ def test_windowing_and_ndvi_bit_parity():
             scene_bbox, res, rb
         )
         sid = f"scene_{RNG.randrange(10**6)}"
-        ba = R.read_window_bands(sid, scene_bbox, res, rb, coll)
+        rec = dict(zip(R.RECIPE_COLUMNS, [sid, *scene_bbox, res, coll, *rb]))
+        recipe = R.window_recipe(rec)
         bb = K.fetch_window_bands(sid, scene_bbox, res, rb, coll)
-        assert (ba is None) == (bb is None)
-        if ba is None:
+        assert (recipe is None) == (bb is None)
+        if bb is None:
             continue
-        assert set(ba) == set(bb)
-        for k in ba:
-            assert np.array_equal(ba[k], bb[k]), k
         if coll == "sentinel-2-l2a":
-            n1 = R.ndvi_s2(ba["red"], ba["nir"], ba.get("scl"))
-            n2 = K.s2_ndvi(bb["red"], bb["nir"], bb.get("scl"))
+            ndvi, mask, masked = K.s2_ndvi(bb["red"], bb["nir"], bb.get("scl"))
         else:
-            n1 = R.ndvi_landsat(ba["red"], ba["nir"], ba.get("qa"))
-            n2 = K.landsat_ndvi(bb["red"], bb["nir"], bb.get("qa"))
-        assert np.array_equal(n1[0], n2[0], equal_nan=True)
-        assert np.array_equal(n1[1], n2[1])
-        assert n1[2] == n2[2]
-        assert R.ndvi_statistics(n1[0], n1[1]) == K.ndvi_stats(n2[0], n2[1])
-        m1 = np.where(n1[1], n1[0], np.nan).astype(np.float32)
-        m1b = np.roll(m1, 1, axis=0)
-        assert R.change_stats(m1, m1b, 0.01) == K.delta_stats(m1, m1b, 0.01)
+            ndvi, mask, masked = K.landsat_ndvi(bb["red"], bb["nir"], bb.get("qa"))
+        # window producer + NDVI builder vs the full-window oracle path
+        values, m = R.window_valid(*recipe)
+        assert m == masked and np.array_equal(values, ndvi[mask])
+        st = K.ndvi_stats(ndvi, mask)
+        assert ND.ndvi_columns(values, ndvi.size, m) == ({} if st is None else {
+            "ndvi_mean": st["mean"], "ndvi_min": st["min"], "ndvi_max": st["max"],
+            "ndvi_std": st["std"], "ndvi_median": st["median"],
+            "valid_pixels": st["valid_pixels"], "total_pixels": st["total_pixels"],
+            "masked_pixels": masked,
+        })
+        m1 = np.where(mask, ndvi, np.nan).astype(np.float32)
+        raster, m = R.masked_ndvi_raster(*recipe)
+        assert m == masked and np.array_equal(raster, m1, equal_nan=True)
+        # pair producer + change builder vs K.delta_stats: side b reads the
+        # same AOI from another scene of the same collection
+        sid_b = sid + "_b"
+        rec.update({"a_" + k: v for k, v in rec.items()})
+        rec.update({"b_" + k: rec["a_" + k] for k in R.RECIPE_COLUMNS}, b_scene_id=sid_b)
+        bb2 = K.fetch_window_bands(sid_b, scene_bbox, res, rb, coll)
+        if coll == "sentinel-2-l2a":
+            n2 = K.s2_ndvi(bb2["red"], bb2["nir"], bb2.get("scl"))
+        else:
+            n2 = K.landsat_ndvi(bb2["red"], bb2["nir"], bb2.get("qa"))
+        m2 = np.where(n2[1], n2[0], np.nan).astype(np.float32)
+        deltas = R.pair_valid_deltas(R.window_recipe(rec, "a_"), R.window_recipe(rec, "b_"))
+        both = np.isfinite(m1) & np.isfinite(m2)
+        assert np.array_equal(deltas, (m2 - m1)[both])
+        want = K.delta_stats(m1, m2, res * res / 10_000)
+        if want is not None:
+            want["valid_change_pixels"] = want.pop("valid_pixels")
+        assert C.change_for_pair(rec, -0.1, 0.1) == want
 
 
 def test_class_window_and_histogram_parity():

@@ -1,17 +1,51 @@
 """Raster kernel goldens — numbers transfer from the reference's tests
-(reference: tests/test_ndvi.py, tests/test_change_detection.py)."""
+(reference: tests/test_ndvi.py, tests/test_change_detection.py). The band
+math runs on the oracle's whole-window kernels; the stats and threshold
+goldens also run through the engine reducer and result builders on the
+compacted arrays."""
 
 import numpy as np
 
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
+from azure_workflow_for_kml_satellite_spark.operators.change import change_columns
+from azure_workflow_for_kml_satellite_spark.operators.ndvi import ndvi_columns
+from azure_workflow_for_kml_satellite_spark.oracle import kernels as K
+
+
+def _ndvi_stats(ndvi, mask, masked):
+    """K.ndvi_stats, after checking the engine builder on ``ndvi[mask]``
+    emits the same numbers under the operator's column names."""
+    st = K.ndvi_stats(ndvi, mask)
+    want = {} if st is None else {
+        "ndvi_mean": st["mean"], "ndvi_min": st["min"], "ndvi_max": st["max"],
+        "ndvi_std": st["std"], "ndvi_median": st["median"],
+        "valid_pixels": st["valid_pixels"], "total_pixels": st["total_pixels"],
+        "masked_pixels": masked,
+    }
+    assert ndvi_columns(ndvi[mask], ndvi.size, masked) == want
+    return st
+
+
+def _change_stats(a, b, resolution_m, loss_threshold=-0.1, gain_threshold=0.1):
+    """K.delta_stats, after checking the engine builder on the compacted
+    jointly-finite deltas emits the same numbers."""
+    st = K.delta_stats(a, b, resolution_m**2 / 10_000, loss_threshold, gain_threshold)
+    both = np.isfinite(a) & np.isfinite(b)
+    got = change_columns((b - a)[both], resolution_m, loss_threshold, gain_threshold)
+    if st is None:
+        assert got is None
+    else:
+        assert got.pop("valid_change_pixels") == st["valid_pixels"]
+        assert got == {k: v for k, v in st.items() if k != "valid_pixels"}
+    return st
 
 
 def test_ndvi_golden_uniform():
     # reference: tests/test_ndvi.py:211-233 — red=1000, nir=3000 → mean 0.5, std 0
     red = np.full((10, 10), 1000, np.uint16)
     nir = np.full((10, 10), 3000, np.uint16)
-    ndvi, mask, masked = R.ndvi_s2(red, nir, None)
-    st = R.ndvi_statistics(ndvi, mask)
+    ndvi, mask, masked = K.s2_ndvi(red, nir, None)
+    st = _ndvi_stats(ndvi, mask, masked)
     assert st["mean"] == 0.5 and st["std"] == 0.0
     assert st["valid_pixels"] == 100 and st["total_pixels"] == 100
     assert masked == 0
@@ -22,8 +56,8 @@ def test_ndvi_nodata_pixels():
     red = np.full((4, 4), 1000, np.uint16)
     nir = np.full((4, 4), 3000, np.uint16)
     red[0, 0] = 0
-    ndvi, mask, _ = R.ndvi_s2(red, nir, None)
-    st = R.ndvi_statistics(ndvi, mask)
+    ndvi, mask, masked = K.s2_ndvi(red, nir, None)
+    st = _ndvi_stats(ndvi, mask, masked)
     assert st["valid_pixels"] == 15 and st["total_pixels"] == 16
 
 
@@ -31,7 +65,7 @@ def test_ndvi_shape_mismatch_trim():
     # reference: tests/test_ndvi.py:255-276
     red = np.full((5, 4), 1000, np.uint16)
     nir = np.full((4, 5), 3000, np.uint16)
-    ndvi, mask, _ = R.ndvi_s2(red, nir, None)
+    ndvi, mask, _ = K.s2_ndvi(red, nir, None)
     assert ndvi.shape == (4, 4)
 
 
@@ -40,8 +74,8 @@ def test_scl_mask_golden():
     red = np.full((4, 4), 1000, np.uint16)
     nir = np.full((4, 4), 3000, np.uint16)
     scl = np.array([[4, 9], [4, 4]], np.uint8)
-    ndvi, mask, masked = R.ndvi_s2(red, nir, scl)
-    st = R.ndvi_statistics(ndvi, mask)
+    ndvi, mask, masked = K.s2_ndvi(red, nir, scl)
+    st = _ndvi_stats(ndvi, mask, masked)
     assert masked == 4 and st["valid_pixels"] == 12
 
 
@@ -50,14 +84,14 @@ def test_landsat_qa_mask():
     red = np.full((2, 2), 5000, np.uint16)
     nir = np.full((2, 2), 9000, np.uint16)
     qa = np.array([[0, 8], [2, 0]], np.uint16)  # 8=cloud bit3, 2=dilated bit1
-    ndvi, mask, masked = R.ndvi_landsat(red, nir, qa)
-    st = R.ndvi_statistics(ndvi, mask)
+    ndvi, mask, masked = K.landsat_ndvi(red, nir, qa)
+    st = _ndvi_stats(ndvi, mask, masked)
     assert masked == 2 and st["valid_pixels"] == 2
 
 
 def test_resample_nearest_2x():
     scl = np.array([[1, 2], [3, 4]], np.uint8)
-    out = R.resample_nearest(scl, (4, 4))
+    out = K.nn_resample(scl, (4, 4))
     assert out.shape == (4, 4)
     assert out[0, 0] == 1 and out[3, 3] == 4 and out[0, 3] == 2
 
@@ -66,7 +100,7 @@ def test_change_uniform_loss():
     # reference: tests/test_change_detection.py:37-49 — 0.6 → 0.3 → loss 100%
     a = np.full((5, 5), 0.6, np.float32)
     b = np.full((5, 5), 0.3, np.float32)
-    st = R.change_stats(a, b, 0.01)
+    st = _change_stats(a, b, 10.0)
     assert st["loss_pct"] == 100.0 and st["gain_pct"] == 0.0
     assert st["mean_delta"] < -0.2
 
@@ -75,7 +109,7 @@ def test_change_mixed_quadrants():
     # reference: tests/test_change_detection.py:65-78 — 25% loss, 25% gain
     a = np.zeros((2, 2), np.float32)
     b = np.array([[-0.2, 0.2], [0.0, 0.0]], np.float32)
-    st = R.change_stats(a, b, 0.01)
+    st = _change_stats(a, b, 10.0)
     assert st["loss_pct"] == 25.0 and st["gain_pct"] == 25.0
 
 
@@ -83,29 +117,21 @@ def test_change_nan_intersection_only():
     # reference: tests/test_change_detection.py:80-91 — only both-finite counted
     a = np.array([[0.5, np.nan], [0.5, 0.5]], np.float32)
     b = np.array([[0.5, 0.5], [np.nan, 0.5]], np.float32)
-    st = R.change_stats(a, b, 0.01)
+    st = _change_stats(a, b, 10.0)
     assert st["valid_pixels"] == 2
 
 
 def test_change_all_nan_returns_none():
     a = np.full((2, 2), np.nan, np.float32)
-    assert R.change_stats(a, a, 0.01) is None
+    assert _change_stats(a, a, 10.0) is None
 
 
 def test_change_thresholds():
-    # reference: tests/test_change_detection.py:116-134
+    # reference: tests/test_change_detection.py:116-134 (1 ha pixels)
     a = np.zeros((1, 3), np.float32)
     b = np.array([[-0.15, 0.05, 0.15]], np.float32)
-    st = R.change_stats(a, b, 1.0, loss_threshold=-0.1, gain_threshold=0.1)
+    st = _change_stats(a, b, 100.0, loss_threshold=-0.1, gain_threshold=0.1)
     assert st["loss_ha"] == 1.0 and st["gain_ha"] == 1.0 and st["stable_ha"] == 1.0
-
-
-def test_codec_roundtrip_nan():
-    arr = np.array([[0.5, np.nan], [1.0, -1.0]], np.float32)
-    blob = R.pack_raster(arr, 10.0)
-    out, px = R.unpack_raster(blob)
-    assert px == 10.0
-    assert np.array_equal(out, arr, equal_nan=True)
 
 
 def test_synthetic_bands_deterministic_and_window_pure():

@@ -1,7 +1,7 @@
-"""Differential tests: the cache-blocked window evaluators (round-8
-optimization) must be bit-identical to the full-window kernel path for the
-NDVI-stats row and the change-pair row, across window sizes, collections,
-partial scene overlap, and empty windows."""
+"""Differential tests: the engine's NDVI-stats row and change-pair row
+(window/pair producers, reducer, result builders) must be bit-identical to
+the oracle's full-window kernel path (oracle/kernels.py), across window
+sizes, collections, partial scene overlap, and empty windows."""
 
 from __future__ import annotations
 
@@ -11,7 +11,8 @@ import numpy as np
 
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
 from azure_workflow_for_kml_satellite_spark.operators import change as C
-from azure_workflow_for_kml_satellite_spark.operators.ndvi import compute_ndvi_for_row
+from azure_workflow_for_kml_satellite_spark.operators.ndvi import compute_ndvi_for_row, ndvi_columns
+from azure_workflow_for_kml_satellite_spark.oracle import kernels as K
 
 
 def _mk_recipe(rng: random.Random, prefix: str = "", big: bool = False) -> dict:
@@ -42,27 +43,38 @@ def _mk_recipe(rng: random.Random, prefix: str = "", big: bool = False) -> dict:
     }
 
 
-def _full_path_row(rec: dict) -> dict:
-    """The pre-round-8 full-window implementation, kept as the reference."""
-    read_bbox = [rec["min_lon"], rec["min_lat"], rec["max_lon"], rec["max_lat"]]
-    scene_bbox = [rec["s_min_lon"], rec["s_min_lat"], rec["s_max_lon"], rec["s_max_lat"]]
-    coll = rec["ndvi_collection"]
-    bands = R.read_window_bands(
-        rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, coll
+def _full_path_ndvi(rec: dict, prefix: str = ""):
+    """(ndvi, valid_mask, masked_count) of the oracle's whole-window path,
+    or None when the read window is empty."""
+    p = lambda c: rec[prefix + c]
+    coll = p("ndvi_collection")
+    bands = K.fetch_window_bands(
+        p("scene_id"),
+        [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")],
+        p("resolution_m"),
+        [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")],
+        coll,
     )
+    if bands is None:
+        return None
+    if coll == "landsat-c2-l2":
+        return K.landsat_ndvi(bands["red"], bands["nir"], bands.get("qa"))
+    return K.s2_ndvi(bands["red"], bands["nir"], bands.get("scl"))
+
+
+def _full_path_row(rec: dict) -> dict:
+    """The full-window oracle path, under the NDVI operator's column names."""
     out = dict.fromkeys(
         [
             "ndvi_mean", "ndvi_min", "ndvi_max", "ndvi_std", "ndvi_median",
             "valid_pixels", "total_pixels", "masked_pixels", "ndvi_raster",
         ]
     )
-    if bands is None:
+    full = _full_path_ndvi(rec)
+    if full is None:
         return out
-    if coll == "landsat-c2-l2":
-        ndvi, mask, masked = R.ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
-    else:
-        ndvi, mask, masked = R.ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
-    st = R.ndvi_statistics(ndvi, mask)
+    ndvi, mask, masked = full
+    st = K.ndvi_stats(ndvi, mask)
     if st is None:
         return out
     out.update(
@@ -81,12 +93,19 @@ def _full_path_row(rec: dict) -> dict:
 
 
 def _full_path_pair(rec: dict, lt: float = -0.1, gt: float = 0.1):
-    ra = C.masked_ndvi_for_recipe(rec, "a_")
-    rb = C.masked_ndvi_for_recipe(rec, "b_")
-    if ra is None or rb is None:
-        return None
-    (na, res_a), (nb, _) = ra, rb
-    return R.change_stats(na, nb, abs(res_a * res_a) / 10_000, lt, gt)
+    """The full-window oracle path over both sides' masked NDVI rasters,
+    under the change operator's column names."""
+    rasters = []
+    for p in ("a_", "b_"):
+        full = _full_path_ndvi(rec, p)
+        if full is None or not full[1].any():
+            return None
+        rasters.append(np.where(full[1], full[0], np.nan).astype(np.float32))
+    res_a = rec["a_resolution_m"]
+    st = K.delta_stats(*rasters, abs(res_a * res_a) / 10_000, lt, gt)
+    if st is not None:
+        st["valid_change_pixels"] = st.pop("valid_pixels")
+    return st
 
 
 def test_blocked_row_matches_full_path():
@@ -103,19 +122,19 @@ def test_blocked_pair_matches_full_path():
         if i % 3 == 0:  # realistic case: both sides read the same AOI bbox
             for c in ("min_lon", "min_lat", "max_lon", "max_lat"):
                 rec["b_" + c] = rec["a_" + c]
-        assert C.change_stats_for_pair_blocked(rec, -0.1, 0.1) == _full_path_pair(rec), rec
+        assert C.change_for_pair(rec, -0.1, 0.1) == _full_path_pair(rec), rec
 
 
 def test_blocked_stats_monster_window_exact():
     """One deliberately huge window: blocked block count > 100, still exact."""
     seed = R.scene_seed("monster")
     win = (3, 2787, 7, 2791)
-    red = R.gen_band(seed, R.BAND_RED, win)
-    nir = R.gen_band(seed, R.BAND_NIR, win)
+    red = K.band_pixels(seed, K.RED, win)
+    nir = K.band_pixels(seed, K.NIR, win)
     scl_win = (1, 1394, 3, 1396)
-    scl = R.gen_band(seed, R.BAND_SCL, scl_win)
-    ndvi, mask, masked_full = R.ndvi_s2(red, nir, scl)
-    st_full = R.ndvi_statistics(ndvi, mask)
+    scl = K.band_pixels(seed, K.SCL, scl_win)
+    ndvi, mask, masked_full = K.s2_ndvi(red, nir, scl)
+    st_full = K.ndvi_stats(ndvi, mask)
 
     parts = []
     masked = 0
@@ -123,6 +142,10 @@ def test_blocked_stats_monster_window_exact():
         masked += m
         parts.append(nd[vm].copy())
     vals = np.concatenate(parts)
-    st = R.ndvi_statistics_from_values(vals, (win[1] - win[0]) * (win[3] - win[2]))
-    assert st == st_full
-    assert masked == masked_full
+    got = ndvi_columns(vals, (win[1] - win[0]) * (win[3] - win[2]), masked)
+    assert got == {
+        "ndvi_mean": st_full["mean"], "ndvi_min": st_full["min"],
+        "ndvi_max": st_full["max"], "ndvi_std": st_full["std"],
+        "ndvi_median": st_full["median"], "valid_pixels": st_full["valid_pixels"],
+        "total_pixels": st_full["total_pixels"], "masked_pixels": masked_full,
+    }
