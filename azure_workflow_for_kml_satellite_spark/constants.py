@@ -11,7 +11,6 @@ from __future__ import annotations
 METRES_PER_DEGREE_LATITUDE = 111_320.0
 EARTH_RADIUS_M = 6_371_000.0
 EARTH_RADIUS_KM = EARTH_RADIUS_M / 1_000.0
-MULTI_REGION_THRESHOLD_KM = 500.0
 
 # --- AOI defaults (reference: treesight/constants.py:24-32) ---
 DEFAULT_AOI_BUFFER_M = 100.0

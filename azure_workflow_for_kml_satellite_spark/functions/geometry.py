@@ -160,21 +160,6 @@ def centroid(coords: Ring) -> list[float]:
     return [sum(c[0] for c in pts) / n, sum(c[1] for c in pts) / n]
 
 
-def square_bbox(bbox: list[float], padding_pct: float = 10.0) -> list[float]:
-    """Square display window containing bbox + padding (reference: geo.py:143-193)."""
-    min_lon, min_lat, max_lon, max_lat = bbox
-    mid_lat = (min_lat + max_lat) / 2.0
-    mid_lon = (min_lon + max_lon) / 2.0
-    lat_span_m = (max_lat - min_lat) * METRES_PER_DEGREE_LATITUDE
-    lon_span_m = (max_lon - min_lon) * METRES_PER_DEGREE_LATITUDE * math.cos(math.radians(mid_lat))
-    side_m = max(lat_span_m, lon_span_m) * (1 + padding_pct / 100.0)
-    half_side_m = side_m / 2.0
-    half_lat = half_side_m / METRES_PER_DEGREE_LATITUDE
-    cos_lat = math.cos(math.radians(mid_lat))
-    half_lon = half_side_m / (METRES_PER_DEGREE_LATITUDE * cos_lat) if cos_lat > 0 else half_lat
-    return [mid_lon - half_lon, mid_lat - half_lat, mid_lon + half_lon, mid_lat + half_lat]
-
-
 def ensure_closed(ring: Ring) -> Ring:
     """Close a ring in place if open and >=3 vertices (reference: parsers/__init__.py:14-22)."""
     if len(ring) >= 3 and ring[0] != ring[-1]:
@@ -199,11 +184,6 @@ def point_buffer_ring(lat: float, lon: float, buffer_m: float = 500.0, segments:
             ]
         )
     return ensure_closed(ring)
-
-
-def bboxes_intersect(a: list[float], b: list[float]) -> bool:
-    """Exact bbox intersection refinement predicate for the cell equi-join."""
-    return a[0] <= b[2] and b[0] <= a[2] and a[1] <= b[3] and b[1] <= a[3]
 
 
 def point_in_ring(lon: float, lat: float, ring: Ring) -> bool:
@@ -258,23 +238,6 @@ def transform_bbox(bbox: list[float], src_crs: str, dst_crs: str) -> tuple[float
         x_min, y_min = transform_point(bbox[0], bbox[1], src_crs, dst_crs)
         x_max, y_max = transform_point(bbox[2], bbox[3], src_crs, dst_crs)
     return (min(x_min, x_max), min(y_min, y_max), max(x_min, x_max), max(y_min, y_max))
-
-
-def safe_name(name: str) -> str:
-    """G16: artifact-path sanitization (reference: ingestion.py:168)."""
-    return name.replace(" ", "_").replace("/", "_")
-
-
-def crs_from_epsg_code(code: int | None, default: int = 32632) -> str:
-    """G21: 'proj:epsg' → 'EPSG:n' (reference: planetary_computer.py:366-372)."""
-    return f"EPSG:{code if code is not None else default}"
-
-
-def compactness_index(area_ha: float, perimeter_km: float) -> float:
-    """Polsby-Popper 4*pi*area/perimeter^2, 3dp (reference: aoi_metrics.py:289-295)."""
-    if perimeter_km <= 0 or area_ha <= 0:
-        return 0.0
-    return round(4 * math.pi * (area_ha / 100) / perimeter_km**2, 3)
 
 
 def bbox_width_km(bbox: list[float]) -> float:

@@ -3190,9 +3190,6 @@ def _serialize_mb_cabac(st: _PictureDecoder, cab: CabacEncoder, mb_addr: int,
     return dqnz
 
 
-
-
-
 def _compute_inter_mb(st: _PictureDecoder, mb_addr: int, slice_id: int,
                       qp_prev: int, src, opts: dict, num_ref: int) -> dict:
     """Mode/MV selection + transform/quant + reconstruction for one inter
@@ -3727,11 +3724,3 @@ def encode_h264_frames(frames, qp: int = 28, *, deblock: bool = True,
             del dpb[2:]
             frame_num += 1
     return {"sps": sps_nal, "pps": pps_nal, "samples": samples, "recons": recons}
-
-
-def encode_h264(y: np.ndarray, u: np.ndarray, v: np.ndarray, qp: int = 28, **kw):
-    """Single-frame convenience: → (annexb_bytes, (ry, ru, rv) recon)."""
-    out = encode_h264_frames([(y, u, v)], qp, **kw)
-    sc = b"\x00\x00\x00\x01"
-    annexb = sc + out["sps"] + sc + out["pps"] + b"".join(sc + n for n in out["samples"][0])
-    return annexb, out["recons"][0]

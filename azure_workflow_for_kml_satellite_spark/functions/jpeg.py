@@ -67,10 +67,6 @@ def _dct2(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 
 
-def _idct2(coef: np.ndarray) -> np.ndarray:
-    return _C.T @ coef @ _C
-
-
 # ── Huffman ──────────────────────────────────────────────────────────────────
 
 

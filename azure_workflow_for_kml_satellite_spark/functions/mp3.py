@@ -267,9 +267,6 @@ def _parse_header(h: bytes) -> dict:
     }
 
 
-_GR_FIELDS = ("part2_3_length", "big_values", "global_gain", "scalefac_compress")
-
-
 def _parse_side_info(data: bytes, channels: int) -> dict:
     br = _BitReader(data)
     si: dict = {"main_data_begin": br.read(9)}

@@ -4,8 +4,8 @@ telephony / legacy-recorder encodings, decoded from scratch so
 ``audio_metadata`` emits true rms/peak for them (ITU-T G.711 tables and the
 IMA ADPCM step/index algorithm are published standards).
 
-Encoders are included for round-trip tests; the decoders never depend on
-them."""
+The µ-law encoder writes the synthetic WAVE assets; the decoders never
+depend on it."""
 
 from __future__ import annotations
 
@@ -80,28 +80,6 @@ def alaw_decode(data: bytes | np.ndarray) -> np.ndarray:
     return _ALAW_TABLE[np.frombuffer(bytes(data), dtype=np.uint8)]
 
 
-def alaw_encode(samples: np.ndarray) -> bytes:
-    out = bytearray()
-    for s in np.asarray(samples, dtype=np.int32):
-        sign = 0x80 if s >= 0 else 0
-        if s < 0:
-            s = -s - 1 if s == -1 else -s
-        if s > 0x7FFF:
-            s = 0x7FFF
-        if s >= 0x100:
-            seg = 1
-            v = s >> 8
-            while v > 1 and seg < 7:
-                v >>= 1
-                seg += 1
-            mant = (s >> (seg + 3)) & 0x0F
-        else:
-            seg = 0
-            mant = s >> 4
-        out.append((sign | (seg << 4) | mant) ^ 0x55)
-    return bytes(out)
-
-
 # ── IMA (DVI) ADPCM, WAVE format 0x11 ──────────────────────────────────────
 
 _IMA_STEPS = np.array(
@@ -169,57 +147,3 @@ def ima_adpcm_decode(data: bytes, channels: int, block_align: int) -> np.ndarray
         raise ValueError("ADPCM data shorter than one block header")
     n = min(len(c) for c in chans)
     return np.stack([np.array(c[:n], dtype=np.int16) for c in chans], axis=1)
-
-
-def ima_adpcm_encode(
-    samples: np.ndarray, channels: int, samples_per_block: int = 505
-) -> tuple[bytes, int]:
-    """Encode (n, channels) int16 → (data, block_align) for tests. The
-    first sample of each block is stored verbatim in the header."""
-    samples = np.asarray(samples, dtype=np.int16)
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    assert samples.shape[1] == channels
-    nib_per_block = samples_per_block - 1
-    if nib_per_block % 8:
-        raise ValueError("samples_per_block must be 8k+1")
-    block_align = 4 * channels + nib_per_block // 2 * channels
-    out = bytearray()
-    import struct
-
-    idxs = [0] * channels
-    pos = 0
-    n = samples.shape[0]
-    while pos < n:
-        blk = samples[pos : pos + samples_per_block]
-        if blk.shape[0] < samples_per_block:
-            pad = np.repeat(blk[-1:], samples_per_block - blk.shape[0], axis=0)
-            blk = np.concatenate([blk, pad], axis=0)
-        preds = [int(blk[0, c]) for c in range(channels)]
-        for c in range(channels):
-            out += struct.pack("<hBB", preds[c], idxs[c], 0)
-        nibbles: list[list[int]] = [[] for _ in range(channels)]
-        for i in range(1, samples_per_block):
-            for c in range(channels):
-                target = int(blk[i, c])
-                step = int(_IMA_STEPS[idxs[c]])
-                diff = target - preds[c]
-                nib = 8 if diff < 0 else 0
-                diff = abs(diff)
-                if diff >= step:
-                    nib |= 4
-                    diff -= step
-                if diff >= step >> 1:
-                    nib |= 2
-                    diff -= step >> 1
-                if diff >= step >> 2:
-                    nib |= 1
-                preds[c], idxs[c] = _ima_step(nib, preds[c], idxs[c])
-                nibbles[c].append(nib)
-        for g in range(0, len(nibbles[0]), 8):
-            for c in range(channels):
-                grp = nibbles[c][g : g + 8]
-                for k in range(0, 8, 2):
-                    out.append(grp[k] | (grp[k + 1] << 4))
-        pos += samples_per_block
-    return bytes(out), block_align

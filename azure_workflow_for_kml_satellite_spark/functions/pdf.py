@@ -16,9 +16,6 @@ from __future__ import annotations
 A4_W, A4_H = 595.28, 841.89
 MARGIN = 40.0
 
-_FONTS = {"": "Helvetica", "B": "Helvetica-Bold", "I": "Helvetica-Oblique"}
-
-
 def _esc(text: str) -> str:
     out = text.encode("latin-1", "replace").decode("latin-1")
     return out.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")

@@ -19,15 +19,6 @@ import zlib
 import numpy as np
 
 
-def webmercator_tile(lon: float, lat: float, z: int = 12) -> tuple[int, int]:
-    """Web-Mercator tile x/y at zoom z (reference: ndvi.py:528-532)."""
-    n = 2**z
-    x = int((lon + 180) / 360 * n)
-    lat_rad = math.radians(lat)
-    y = int((1 - math.log(math.tan(lat_rad) + 1 / math.cos(lat_rad)) / math.pi) / 2 * n)
-    return x, y
-
-
 def _paeth(a: int, b: int, c: int) -> int:
     """Paeth predictor (reference: ndvi.py:683-693)."""
     p = a + b - c

@@ -128,11 +128,6 @@ def window_from_bounds_m(
     return row0, row1, col0, col1
 
 
-def grid_shape(bbox: list[float], resolution_m: float) -> tuple[int, int]:
-    """(height, width) of a geographic (EPSG:4326) scene raster."""
-    return grid_shape_m(bbox, resolution_m * DEG_PER_METRE)
-
-
 def window_from_bounds(
     scene_bbox: list[float],
     resolution_m: float,

@@ -501,108 +501,6 @@ def _apply_inverse_transforms(pix, transforms, w: int, h: int):
     return pix, w
 
 
-def _s8(v: int) -> int:
-    return v - 256 if v >= 128 else v
-
-
-# ── encoder-side helpers (tests + subset encoder) ───────────────────────────
-
-
-def _huffman_lengths(freqs: dict) -> dict:
-    """Plain Huffman code lengths for a small frequency table (raises past
-    the 15-bit canonical limit — inputs here are tiny)."""
-    import heapq
-
-    syms = [s for s, f in freqs.items() if f > 0]
-    if not syms:
-        raise ValueError("empty alphabet")
-    if len(syms) == 1:
-        return {syms[0]: 1}
-    heap = [(f, i, (s,)) for i, (s, f) in enumerate(sorted(freqs.items())) if f > 0]
-    heapq.heapify(heap)
-    lengths = {s: 0 for s in syms}
-    tie = len(heap)
-    while len(heap) > 1:
-        f1, _, g1 = heapq.heappop(heap)
-        f2, _, g2 = heapq.heappop(heap)
-        for s in g1 + g2:
-            lengths[s] += 1
-        tie += 1
-        heapq.heappush(heap, (f1 + f2, tie, g1 + g2))
-    if max(lengths.values()) > 15:
-        raise ValueError("code length limit exceeded")
-    return lengths
-
-
-def write_prefix_code(wr: _Writer, lengths: list[int]):
-    """Serialize one NORMAL prefix code's length table (the inverse of
-    ``_read_prefix_code``'s normal branch). Returns (codes, lengths) for
-    emitting symbols afterwards — a single-symbol code costs 0 bits."""
-    wr.write(0, 1)  # not simple
-    last_nz = max((i for i, ln in enumerate(lengths) if ln), default=-1)
-    if last_nz < 0:
-        raise ValueError("no symbols")
-    seq = lengths[: last_nz + 1]
-    stream: list[tuple] = []
-    i = 0
-    while i < len(seq):
-        if seq[i] == 0:
-            j = i
-            while j < len(seq) and seq[j] == 0:
-                j += 1
-            run = j - i
-            while run > 0:
-                if run >= 11:
-                    take = min(run, 138)
-                    stream.append((18, take - 11, 7))
-                elif run >= 3:
-                    take = min(run, 10)
-                    stream.append((17, take - 3, 3))
-                else:
-                    take = 1
-                    stream.append((0, None, 0))
-                run -= take
-            i = j
-        else:
-            stream.append((seq[i], None, 0))
-            i += 1
-    if len(stream) < 2:
-        stream.append((0, None, 0))  # pad so max_symbol (>= 2) fits exactly
-    freqs: dict = {}
-    for s, _e, _b in stream:
-        freqs[s] = freqs.get(s, 0) + 1
-    cl_map = _huffman_lengths(freqs)
-    cl_lengths = [cl_map.get(s, 0) for s in range(19)]
-    used = {s for s in range(19) if cl_lengths[s]}
-    num = max(max(i for i, s in enumerate(_CODE_LENGTH_ORDER) if s in used) + 1, 4)
-    wr.write(num - 4, 4)
-    for s in _CODE_LENGTH_ORDER[:num]:
-        wr.write(cl_lengths[s], 3)
-    cl_codes = _canonical_codes(cl_lengths)
-    cl_single = sum(1 for ln in cl_lengths if ln) == 1
-    ms = len(stream)
-    k = 0
-    while ms - 2 >= (1 << (2 + 2 * k)):
-        k += 1
-    wr.write(1, 1)
-    wr.write(k, 3)
-    wr.write(ms - 2, 2 + 2 * k)
-    for s, extra, ebits in stream:
-        if not cl_single:
-            wr.write_code(cl_codes[s], cl_map[s])
-        if ebits:
-            wr.write(extra, ebits)
-    codes = _canonical_codes(lengths)
-    return codes, lengths
-
-
-def emit_symbol(wr: _Writer, codes: dict, lengths: list[int], sym: int) -> None:
-    """Emit one symbol of a code written by write_prefix_code (no-op bits
-    for a single-symbol code)."""
-    if sum(1 for ln in lengths if ln) > 1:
-        wr.write_code(codes[sym], lengths[sym])
-
-
 # ── public API ──────────────────────────────────────────────────────────────
 
 

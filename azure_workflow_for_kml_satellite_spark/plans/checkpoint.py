@@ -143,19 +143,6 @@ class CheckpointManager:
     def _read_manifest(self, sid: int) -> dict:
         return json.loads((self._snapshots_dir / f"v{sid}.json").read_text())
 
-    def _unsnapshotted_files(self) -> list[str]:
-        """Data files present before the first manifest (legacy/bootstrap).
-        ``commit-*`` files are manifest-managed: one not yet referenced by
-        any manifest is an in-flight (or orphaned) append and must stay
-        invisible until its own commit publishes it."""
-        if not self.ledger_dir.exists():
-            return []
-        return sorted(
-            p.name
-            for p in self.ledger_dir.glob("*.parquet")
-            if not p.name.startswith("commit-")
-        )
-
     def _commit_snapshot(self, new_files: list[str]) -> int:
         """Publish a new manifest containing the base file list plus
         ``new_files``. The base is the current head — or, for a manager
@@ -178,7 +165,7 @@ class CheckpointManager:
                     ) from None
                 parent = self.snapshot_id
             elif head is None:
-                base = self._unsnapshotted_files()
+                base = []
                 parent = None
             else:
                 base = self._read_manifest(head)["files"]
@@ -208,14 +195,14 @@ class CheckpointManager:
 
     def _live_files(self) -> list[str]:
         """The data files visible to this manager: the pinned snapshot's
-        list, else the head manifest's, else the legacy glob."""
+        list, else the head manifest's, else none (nothing committed yet)."""
         sid = self.snapshot_id if self.snapshot_id is not None else self.current_snapshot_id()
         if sid is not None:
             try:
                 return self._read_manifest(sid)["files"]
             except FileNotFoundError:
                 raise ValueError(f"unknown ledger snapshot {sid}") from None
-        return self._unsnapshotted_files()
+        return []
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Iceberg's ``expire_snapshots``: drop all but the newest
@@ -233,8 +220,8 @@ class CheckpointManager:
     def remove_orphans(self, older_than_s: float = 300.0) -> list[str]:
         """Iceberg's ``remove_orphan_files``: delete ``commit-*`` data
         files referenced by NO surviving manifest (crashed writers, expired
-        history). Files listed by any manifest — or any non-commit legacy
-        file — are kept. Returns the removed names.
+        history). Files listed by any manifest, and any file not named
+        ``commit-*``, are kept. Returns the removed names.
 
         ``older_than_s`` is the same guard Iceberg's procedure applies: an
         appender publishes its data file (``os.replace`` into the ledger
@@ -267,62 +254,14 @@ class CheckpointManager:
         """The ledger as a DataFrame (empty with the right schema if no row
         has been committed yet) — a snapshot-isolated read: exactly the
         files listed by the resolved manifest (pinned ``snapshot_id`` or
-        head). Legacy driver-side JSON ledger files (the pre-table format)
-        are migrated into the parquet ledger on first read — silently
-        treating such a run as fresh would re-run completed stages and
-        double-append already-completed partitions."""
-        self._migrate_legacy_json()
+        head). Files in ``_ledger/`` that no manifest lists are never
+        read."""
         files = self._live_files()
         if files:
             return self.spark.read.schema(LEDGER_SCHEMA).parquet(
                 *[str(self.ledger_dir / f) for f in files]
             )
         return self.spark.createDataFrame([], LEDGER_SCHEMA)
-
-    def _migrate_legacy_json(self) -> None:
-        """Convert leftover ``_ledger/*.json`` rows (one JSON object or a
-        JSON list per file) into the parquet ledger, then rename the source
-        file to ``_migrated_*.json`` (the ``_`` prefix keeps Spark's parquet
-        file index from touching it) so migration is one-shot. Unreadable or
-        schema-incompatible files raise instead of being dropped."""
-        if not self.ledger_dir.exists():
-            return
-        legacy = sorted(
-            p for p in self.ledger_dir.glob("*.json") if not p.name.startswith("_migrated_")
-        )
-        if not legacy:
-            return
-        import json
-
-        field_names = [f.split()[0] for f in LEDGER_SCHEMA.split(", ")]
-        rows: list[dict] = []
-        for path in legacy:
-            try:
-                payload = json.loads(path.read_text())
-            except (OSError, json.JSONDecodeError) as exc:
-                raise RuntimeError(
-                    f"incompatible ledger format: cannot parse legacy ledger file {path}"
-                ) from exc
-            for rec in payload if isinstance(payload, list) else [payload]:
-                if not isinstance(rec, dict) or "stage" not in rec:
-                    raise RuntimeError(
-                        f"incompatible ledger format: unexpected record in {path}: {rec!r}"
-                    )
-                rows.append(
-                    {
-                        "run_id": rec.get("run_id", self.run_id),
-                        "stage": rec["stage"],
-                        "partition": str(rec.get("partition", "__ALL__")),
-                        "rows": int(rec.get("rows", 0)),
-                        "duration_s": float(rec.get("duration_s", 0.0)),
-                        "status": rec.get("status", "completed"),
-                        "ts": str(rec.get("ts", "")),
-                    }
-                )
-        if rows:
-            self._append_ledger([{k: r.get(k) for k in field_names} for r in rows])
-        for path in legacy:
-            path.rename(path.with_name(f"_migrated_{path.name}"))
 
     def _append_ledger(self, rows: list[dict]) -> None:
         """Append = stage a data file, then atomically publish a snapshot
@@ -363,7 +302,6 @@ class CheckpointManager:
             self._commit_snapshot(new_files)
 
     def ledger_rows(self) -> list[dict]:
-        self._migrate_legacy_json()
         if not self._live_files():
             return []
         return [r.asDict() for r in self.ledger().collect()]

@@ -18,8 +18,6 @@ Strategy (deterministic):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -96,9 +94,3 @@ def salted_equi_join(
     return b.join(s, [cell_col, "salt"], how).drop("salt")
 
 
-def repartition_by_cell(df: DataFrame, cell_col: str = "cell", partitions: int | None = None,
-                        salt_col: str | None = None) -> DataFrame:
-    """Cell-level repartitioning (optionally including the salt) so
-    downstream per-cell work is co-located without a later shuffle."""
-    cols = [F.col(cell_col)] + ([F.col(salt_col)] if salt_col else [])
-    return df.repartition(partitions, *cols) if partitions else df.repartition(*cols)

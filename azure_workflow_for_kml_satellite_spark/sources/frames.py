@@ -157,19 +157,7 @@ def filter_frames(
     ]
 
 
-def max_history_date_start(max_history_years: int, as_of_year: int = DEFAULT_AS_OF_YEAR) -> str:
-    """F2: cap the range to the most recent N years when no explicit start
-    (reference: frames.py:216-219): date_start = (year − N)-01-01."""
-    return f"{as_of_year - max_history_years}-01-01"
-
-
 EUDR_FRAME_DATE_START = "2021-01-01"
-
-
-def eudr_filter(frames: list[dict]) -> list[dict]:
-    """F4: EUDR mode starts analysis frames at 2021-01-01 (cutoff 2020-12-31,
-    reference: constants.py:112-114; applied runner.py:662-665)."""
-    return filter_frames(frames, EUDR_FRAME_DATE_START, None)
 
 
 def all_frame_rows(as_of_year: int = DEFAULT_AS_OF_YEAR, cadence: str = "maximum") -> list[dict]:

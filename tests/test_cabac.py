@@ -26,6 +26,7 @@ from azure_workflow_for_kml_satellite_spark.functions.cabac import (
     validate_range_tab,
     validate_trans_idx,
 )
+from tests.encoders import encode_h264
 
 
 def _pad(bw):
@@ -185,7 +186,7 @@ def test_cabac_intra_matrix_bit_exact():
                     i += 1
                     h, w = (48, 80) if i % 2 else (32, 48)
                     y, u, v = _frames(kind, h, w, rng, i)
-                    annexb, recon = H.encode_h264(
+                    annexb, recon = encode_h264(
                         y, u, v, qp=qp, entropy="cabac", pcm_every=pcm,
                         n_slices=nsl, qp_jitter=3, seed=i,
                     )
@@ -198,8 +199,8 @@ def test_cavlc_and_cabac_share_reconstruction():
     # entropy coding must not change the reconstruction — same compute path
     rng = np.random.default_rng(21)
     y, u, v = _frames("noise", 48, 64, rng)
-    _, r1 = H.encode_h264(y, u, v, qp=30, entropy="cavlc", seed=5)
-    _, r2 = H.encode_h264(y, u, v, qp=30, entropy="cabac", seed=5)
+    _, r1 = encode_h264(y, u, v, qp=30, entropy="cavlc", seed=5)
+    _, r2 = encode_h264(y, u, v, qp=30, entropy="cabac", seed=5)
     for a, b in zip(r1, r2):
         assert np.array_equal(a, b)
 

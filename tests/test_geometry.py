@@ -65,20 +65,6 @@ def test_haversine_known():
     assert 110.5 < d < 111.8
 
 
-def test_square_bbox_metric_squareness():
-    # reference: tests/test_geo.py:153-173 — output square within 1% in metres
-    import math
-
-    bbox = [36.8, -1.3, 36.81, -1.295]  # wide, flat
-    sq = geo.square_bbox(bbox, padding_pct=10.0)
-    mid_lat = (sq[1] + sq[3]) / 2
-    h_m = (sq[3] - sq[1]) * 111_320.0
-    w_m = (sq[2] - sq[0]) * 111_320.0 * math.cos(math.radians(mid_lat))
-    assert abs(h_m - w_m) / h_m < 0.01
-    # contains the original
-    assert sq[0] < bbox[0] and sq[2] > bbox[2]
-
-
 def test_point_in_polygon_with_hole():
     outer = _square(0, 0, 1.0)
     hole = _square(0.4, 0.4, 0.2)
@@ -102,15 +88,31 @@ def test_flatten_roundtrip():
     assert geo.unflatten_ring(geo.flatten_ring(ring)) == ring
 
 
-def test_compactness_circle_near_one():
+def test_compactness_circle_near_one(spark):
+    """Polsby-Popper 4*pi*area/perimeter^2 at 3 dp (reference:
+    aoi_metrics.py:289-295), checked on the shipped ``compactness`` column of
+    ``geometry_metrics``: a circle scores 1.0, zero area or perimeter 0.0."""
     import math
 
-    # circle-ish: area pi*r^2, perimeter 2*pi*r with r=1km → compactness 1
+    from azure_workflow_for_kml_satellite_spark.operators.metrics import (
+        geometry_metrics,
+    )
+
+    # circle: area pi*r^2, perimeter 2*pi*r with r=1km → compactness 1
     r_km = 1.0
-    area_ha = math.pi * r_km * r_km * 100
-    per_km = 2 * math.pi * r_km
-    assert geo.compactness_index(area_ha, per_km) == 1.0
-    assert geo.compactness_index(0, 1) == 0.0
+    rows = [
+        ("circle", math.pi * r_km * r_km * 100, 2 * math.pi * r_km),
+        ("no_area", 0.0, 1.0),
+        ("no_perimeter", 1.0, 0.0),
+    ]
+    aois = spark.createDataFrame(
+        [(u, 0, u, a, p, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0) for u, a, p in rows],
+        "url string, feature_index int, name string, area_ha double, "
+        "perimeter_km double, centroid_lon double, centroid_lat double, "
+        "min_lon double, min_lat double, max_lon double, max_lat double",
+    )
+    got = {r.url: r.compactness for r in geometry_metrics(aois).collect()}
+    assert got == {"circle": 1.0, "no_area": 0.0, "no_perimeter": 0.0}
 
 
 def test_area_golden_band_both_paths():

@@ -33,6 +33,7 @@ import pytest
 
 from azure_workflow_for_kml_satellite_spark.functions import h264 as H
 from azure_workflow_for_kml_satellite_spark.functions import h264_tables as T
+from tests.encoders import encode_h264
 
 
 def _mk(h, w, kind, seed=3):
@@ -113,7 +114,7 @@ def test_recon_error_scales_with_qstep():
     y, u, v = _mk(32, 32, "noise", seed=8)
     prev = None
     for qp in (0, 12, 24, 36, 48):
-        annexb, (ry, _, _) = H.encode_h264(y, u, v, qp=qp, deblock=False)
+        annexb, (ry, _, _) = encode_h264(y, u, v, qp=qp, deblock=False)
         err = float(np.abs(ry.astype(int) - y.astype(int)).mean())
         qstep = 0.625 * 2 ** (qp / 6)
         assert err <= max(1.0, 1.5 * qstep), (qp, err, qstep)
@@ -128,7 +129,7 @@ def test_recon_error_scales_with_qstep():
 def test_ipcm_bit_exact_anchor():
     for (h, w) in ((16, 16), (32, 48), (20, 14)):
         y, u, v = _mk(h, w, "noise", seed=h * 100 + w)
-        annexb, _ = H.encode_h264(y, u, v, qp=30, pcm_every=1)
+        annexb, _ = encode_h264(y, u, v, qp=30, pcm_every=1)
         dy, du, dv = H.decode_h264_annexb(annexb)
         assert np.array_equal(dy, y) and np.array_equal(du, u) and np.array_equal(dv, v)
 
@@ -154,7 +155,7 @@ def test_roundtrip_matrix_bit_exact(dims):
     for kind in ("noise", "grad", "flat"):
         for i, kw in enumerate(_CASES):
             y, u, v = _mk(h, w, kind, seed=i)
-            annexb, (ry, ru, rv) = H.encode_h264(y, u, v, seed=i, **kw)
+            annexb, (ry, ru, rv) = encode_h264(y, u, v, seed=i, **kw)
             dy, du, dv = H.decode_h264_annexb(annexb)
             assert dy.shape == (h, w)
             assert np.array_equal(dy, ry), (dims, kind, kw)
@@ -181,8 +182,8 @@ def test_avcc_sample_path():
 
 def test_deblock_filter_is_load_bearing():
     y, u, v = _mk(48, 48, "noise", seed=2)
-    _, (r_on, _, _) = H.encode_h264(y, u, v, qp=45, deblock=True)
-    _, (r_off, _, _) = H.encode_h264(y, u, v, qp=45, deblock=False)
+    _, (r_on, _, _) = encode_h264(y, u, v, qp=45, deblock=True)
+    _, (r_off, _, _) = encode_h264(y, u, v, qp=45, deblock=False)
     assert not np.array_equal(r_on, r_off)
 
 
@@ -201,7 +202,7 @@ def test_emulation_prevention_roundtrip():
 
 def _small_stream():
     y, u, v = _mk(16, 16, "grad", seed=1)
-    annexb, _ = H.encode_h264(y, u, v, qp=30)
+    annexb, _ = encode_h264(y, u, v, qp=30)
     return annexb
 
 

@@ -171,3 +171,43 @@ def test_extract_prefilter_is_semantics_preserving(spark):
     b = sorted(map(tuple, extract_features(both, prefilter=False).collect()))
     assert a == b
     assert not any(r[0] == "https://nokml.example/x" for r in a)
+
+
+def test_extract_quarantines_kml_over_feature_cap(spark, tmp_path):
+    """A KML document with 501 placemarks (one over MAX_FEATURES_PER_KML)
+    becomes exactly one quarantine row; 500 placemarks still extract. The
+    sequential oracle agrees on both pages."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azure_workflow_for_kml_satellite_spark.operators.extract import (
+        extract_features,
+    )
+    from azure_workflow_for_kml_satellite_spark.oracle.sequential import (
+        compute_features,
+    )
+
+    placemark = KML[KML.index(b"<Placemark>") : KML.index(b"</Document>")]
+    pages = {
+        f"https://example.org/cap/{n}": b"<html><body>"
+        + KML.replace(placemark, placemark * n)
+        + b"</body></html>"
+        for n in (500, 501)
+    }
+    over, at = "https://example.org/cap/501", "https://example.org/cap/500"
+    msg = "KML contains 501 features; maximum is 500"
+
+    rows = extract_features(
+        spark.createDataFrame(list(pages.items()), "url string, html binary")
+    ).collect()
+    assert [(r.feature_index, r.error) for r in rows if r.url == over] == [(None, msg)]
+    got_at = sorted(r.feature_index for r in rows if r.url == at and r.error is None)
+    assert got_at == list(range(500))
+
+    path = tmp_path / "pages.parquet"
+    pq.write_table(pa.table({"url": list(pages), "html": list(pages.values())}), path)
+    oracle = compute_features(path)
+    assert [r for r in oracle if r["url"] == over] == [
+        {"url": over, "feature_index": None, "error": msg}
+    ]
+    assert sum(1 for r in oracle if r["url"] == at and r["error"] is None) == 500

@@ -1,4 +1,4 @@
-"""Coordinate parsers, gates, exports, multimodal stubs, streaming, EUDR."""
+"""Coordinate parsers, exports, multimodal operators, kNN join, clustering."""
 
 import pandas as pd
 import pytest
@@ -66,34 +66,6 @@ def test_csv_points_fuzzy_columns(spark):
     got = {r["name"]: r for r in aois.collect()}
     assert got["B"]["has_naip"] is True
     assert got["A"]["area_ha"] > 0
-
-
-# ── gates ────────────────────────────────────────────────────────────────────
-
-
-def test_multi_region_gate(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.gates import is_multi_region
-
-    near = spark.createDataFrame(
-        [(36.8, -1.3), (36.9, -1.2)], ["centroid_lon", "centroid_lat"]
-    )
-    far = spark.createDataFrame(
-        [(36.8, -1.3), (5.0, 48.0)], ["centroid_lon", "centroid_lat"]
-    )
-    assert is_multi_region(near) is False
-    assert is_multi_region(far) is True
-
-
-def test_feature_limit_gate(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.extract import extract_features
-    from azure_workflow_for_kml_satellite_spark.operators.gates import enforce_feature_limit
-
-    pages = spark.read.parquet(f"{SF_SMALL}/pages.parquet")
-    feats = extract_features(pages)
-    gated = enforce_feature_limit(feats, limit=100)
-    # the monster page (200 features) trips the limit
-    bad = gated.filter(F.col("error").contains("AOI limit exceeded"))
-    assert bad.select("url").distinct().count() == 1
 
 
 # ── exports ──────────────────────────────────────────────────────────────────
@@ -207,173 +179,6 @@ def test_video_frame_sample(spark):
     assert [f["frame_index"] for f in frames] == list(range(len(frames)))
 
 
-# ── streaming ────────────────────────────────────────────────────────────────
-
-
-def test_streaming_extract_matches_batch(spark, tmp_path):
-    import shutil
-
-    from azure_workflow_for_kml_satellite_spark.operators.extract import extract_features
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_extract,
-    )
-
-    src = tmp_path / "pages_in"
-    src.mkdir()
-    shutil.copy(f"{SF_SMALL}/pages.parquet", src / "pages.parquet")
-    q = run_stream_to_memory(
-        streaming_extract(spark, str(src)), "feat_stream", mode="append"
-    )
-    try:
-        got = spark.sql("select count(*) n from feat_stream").collect()[0]["n"]
-    finally:
-        q.stop()
-    batch = extract_features(spark.read.parquet(f"{SF_SMALL}/pages.parquet")).count()
-    assert got == batch
-
-
-def test_streaming_stateful_sessionize(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_sessionize,
-    )
-
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    # user 1: two sessions split by a 2h gap; user 2: one session
-    ev = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00", 1, "click", 1.0, ""),
-            (2, "2024-01-01 10:10:00", 1, "click", 1.0, ""),
-            (3, "2024-01-01 13:00:00", 1, "click", 1.0, ""),
-            (4, "2024-01-01 09:00:00", 2, "view", 1.0, ""),
-        ],
-        "event_id long, ts_s string, user_id long, event_type string, value double, props string",
-    ).select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "event_type", "value", "props"
-    )
-    ev.write.parquet(str(src / "p1"))
-    q = run_stream_to_memory(
-        streaming_sessionize(spark, str(src) + "/*", gap_s=1800), "sess_stream", mode="append"
-    )
-    try:
-        rows = spark.sql("select * from sess_stream").collect()
-    finally:
-        q.stop()
-    # only user 1's FIRST session closes (gap observed); open sessions stay in state
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["user_id"] == 1 and r["n_events"] == 2
-    assert r["session_start"].minute == 0 and r["session_end"].minute == 10
-
-
-def test_streaming_event_window_counts(spark, tmp_path):
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_event_counts,
-    )
-
-    src = tmp_path / "events_in"
-    src.mkdir()
-    ev = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:05:00", 1, "click", 1.0, ""),
-            (2, "2024-01-01 10:45:00", 1, "click", 2.0, ""),
-            (3, "2024-01-01 11:05:00", 2, "view", 3.0, ""),
-        ],
-        "event_id long, ts_s string, user_id long, event_type string, value double, props string",
-    ).select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "event_type", "value", "props"
-    )
-    ev.write.parquet(str(src / "p1"))
-    q = run_stream_to_memory(
-        streaming_event_counts(spark, str(src) + "/*"), "evt_stream"
-    )
-    try:
-        rows = {
-            (r["window_start"].hour, r["event_type"]): r["n_events"]
-            for r in spark.sql("select * from evt_stream").collect()
-        }
-    finally:
-        q.stop()
-    assert rows[(10, "click")] == 2
-    assert rows[(11, "view")] == 1
-
-
-def test_streaming_exact_dedup_drops_copies(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from datetime import datetime
-
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_exact_dedup,
-    )
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    ts = [datetime(2024, 1, 1, 0, m) for m in range(6)]
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0, 1, 2, 3, 4, 5], pa.int64()),
-                "ts": pa.array(ts, pa.timestamp("us")),
-                "text": ["aa", "bb", "aa", "cc", "bb", "aa"],
-            }
-        ),
-        src / "part0.parquet",
-    )
-    q = run_stream_to_memory(
-        streaming_exact_dedup(spark, str(src)), "dedup_stream", mode="append"
-    )
-    try:
-        rows = spark.sql("select doc_id from dedup_stream").collect()
-    finally:
-        q.stop()
-    # one row per distinct text; within one micro-batch Spark keeps one
-    # arbitrary-but-single representative per hash
-    assert len(rows) == 3
-
-
-def test_streaming_quality_gate_filters(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from datetime import datetime
-
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_quality_gate,
-    )
-
-    src = tmp_path / "docs_q"
-    src.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0, 1, 2], pa.int64()),
-                "ts": pa.array([datetime(2024, 1, 1)] * 3, pa.timestamp("us")),
-                "text": [
-                    "a good long document with many plain tokens here",
-                    "short",
-                    "!!! ??? ### $$$ %%% ^^^ &&& *** ((( )))",
-                ],
-            }
-        ),
-        src / "part0.parquet",
-    )
-    q = run_stream_to_memory(
-        streaming_quality_gate(spark, str(src)), "quality_stream", mode="append"
-    )
-    try:
-        ids = sorted(r.doc_id for r in spark.sql("select doc_id from quality_stream").collect())
-    finally:
-        q.stop()
-    assert ids == [0]
-
-
 def test_image_metadata_real_png_decode(spark):
     """PNG payloads go through the real from-scratch decoder: the reported
     dims/mean are TRUE pixel statistics, and corrupt PNGs quarantine."""
@@ -397,37 +202,6 @@ def test_image_metadata_real_png_decode(spark):
     assert abs(out["ok"].mean_luma - round(float(img.mean()), 4)) < 1e-9
     assert out["ok"].decode_error is None
     assert out["bad"].decode_error is not None and out["bad"].width is None
-
-
-def test_multi_region_gate_huge_n_sound(spark):
-    """Above exact_limit the gate must stay SOUND: an L-shaped cloud whose
-    span BOUND exceeds the threshold but whose true max pairwise distance
-    does not must classify single-region (the round-2 early-True would have
-    misclassified it), and a genuinely split cloud must classify multi."""
-    from azure_workflow_for_kml_satellite_spark.operators.gates import is_multi_region
-
-    # L-shape near the equator: two 2.6°-long arms (~290 km each) sharing a
-    # corner → span bound ≈ 580 km > 500 km threshold, true max ≈ 410 km.
-    arm = [(0.0 + 0.026 * i, 0.0) for i in range(100)] + [
-        (0.0, 0.0 + 0.026 * i) for i in range(100)
-    ]
-    l_shape = spark.createDataFrame(arm, ["centroid_lon", "centroid_lat"])
-    assert is_multi_region(l_shape, exact_limit=10) is False
-
-    # same shape plus one far outlier → witnessed multi-region
-    split = spark.createDataFrame(
-        arm + [(20.0, 20.0)], ["centroid_lon", "centroid_lat"]
-    )
-    assert is_multi_region(split, exact_limit=10) is True
-
-    # two tight clusters ~600 km apart along a diagonal: the global extreme
-    # points witness it even when n is huge relative to exact_limit
-    two = spark.createDataFrame(
-        [(0.0 + 0.001 * i, 0.0) for i in range(30)]
-        + [(3.8 + 0.001 * i, 3.8) for i in range(30)],
-        ["centroid_lon", "centroid_lat"],
-    )
-    assert is_multi_region(two, exact_limit=10) is True
 
 
 # ── round 3: real JPEG decode + WAV audio ────────────────────────────────────
@@ -668,58 +442,6 @@ def test_video_frame_sample_real_mjpeg_avi(spark):
         "asset_id string, payload binary",
     )
     assert video_frame_sample(df3).count() >= 1
-
-
-def test_streaming_dedup_evicts_state_and_reemits_late_duplicate(spark, tmp_path):
-    """dropDuplicatesWithinWatermark semantics: duplicates inside the
-    watermark window are dropped, and a duplicate arriving AFTER the
-    watermark passed the original re-emits (state was evicted — the bounded
-    state/completeness trade the docstring documents; plain dropDuplicates
-    on a non-event-time subset would keep state forever and never re-emit)."""
-    from datetime import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_exact_dedup,
-    )
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-
-    def write(name, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "text": [r[2] for r in rows],
-                }
-            ),
-            src / name,
-        )
-
-    # batch 1: original + in-window duplicate (watermark = 1 hour)
-    write("b1.parquet", [(0, datetime(2024, 1, 1, 0, 0), "aa"),
-                         (1, datetime(2024, 1, 1, 0, 30), "aa")])
-    q = run_stream_to_memory(
-        streaming_exact_dedup(spark, str(src), watermark="1 hour"),
-        "dedup_wm", mode="append",
-    )
-    try:
-        # batch 2: advance event time far past aa's watermark horizon
-        write("b2.parquet", [(2, datetime(2024, 1, 1, 6, 0), "bb")])
-        q.processAllAvailable()
-        # batch 3: duplicate of aa arrives after eviction → re-emits
-        write("b3.parquet", [(3, datetime(2024, 1, 1, 6, 1), "aa")])
-        q.processAllAvailable()
-        ids = sorted(r.doc_id for r in spark.sql("select doc_id from dedup_wm").collect())
-    finally:
-        q.stop()
-    # 0 kept, 1 dropped (in-window dup), 2 kept, 3 re-emitted after eviction
-    assert ids == [0, 2, 3]
 
 
 def test_video_frame_sample_quarantines_corrupt_avi(spark):
@@ -1245,7 +967,6 @@ def test_video_frame_sample_no_partial_rows_on_mid_decode_failure(spark):
     assert "corrupt MP4 payload" in out.iloc[0].decode_error
 
 
-
 def test_jpeg_12bit_extended_sequential_decodes():
     """12-bit (SOF1 precision 12) frames decode at full precision and
     render to uint8: smooth fields reproduce within 1/255, hard DC swings
@@ -1367,76 +1088,6 @@ def test_image_thumbnails_resize_op(spark):
     assert bytes(rows["png"].thumbnail_png) == bytes(rows["webp"].thumbnail_png)
     assert (rows["tiny"].thumb_width, rows["tiny"].thumb_height) == (10, 10)  # no upscale
     assert rows["bad"].decode_error is not None and rows["bad"].thumbnail_png is None
-
-
-def test_streaming_sessionize_matches_batch_on_events_table(spark, tmp_path):
-    """Differential gate for the stateful streaming sessionizer: on the
-    driver's real events table (with a far-future sentinel per user so
-    every real session closes), the emitted (user, n_events, duration)
-    multiset must equal the batch window-function sessionization's."""
-    from pyspark.sql import Window
-
-    from azure_workflow_for_kml_satellite_spark.streaming.pipelines import (
-        run_stream_to_memory,
-        streaming_sessionize,
-    )
-
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-    )
-    src = tmp_path / "sess_diff"
-    src.mkdir()
-    ev.write.parquet(str(src / "p1"))
-    sentinel = (
-        ev.groupBy("user_id")
-        .agg(F.max("ts").alias("mx"))
-        .select(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("mx") + F.expr("INTERVAL 400 DAYS")).alias("ts"),
-            "user_id",
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("").alias("props"),
-        )
-    )
-    sentinel.write.parquet(str(src / "p2"))
-
-    q = run_stream_to_memory(
-        streaming_sessionize(spark, str(src) + "/*", gap_s=1800),
-        "sess_diff_stream",
-        mode="append",
-    )
-    try:
-        got = spark.sql(
-            "select user_id, n_events, "
-            "cast(session_end as long) - cast(session_start as long) as duration_s "
-            "from sess_diff_stream"
-        ).collect()
-    finally:
-        q.stop()
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    batch = (
-        ev.withColumn("new_s", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .withColumn("sid", F.sum("new_s").over(w))
-        .groupBy("user_id", "sid")
-        .agg(F.count("*").alias("n_events"), (F.max(epoch) - F.min(epoch)).alias("duration_s"))
-        .collect()
-    )
-    got_ms = sorted((r.user_id, r.n_events, r.duration_s) for r in got)
-    batch_ms = sorted((r.user_id, r.n_events, r.duration_s) for r in batch)
-    assert len(batch_ms) > 50  # real data, not a toy
-    assert got_ms == batch_ms
 
 
 def test_image_thumbnails_gray_alpha_quarantine_not_crash(spark):

@@ -249,7 +249,7 @@ def test_windowing_properties():
         read = [x0 + rx, y0 + ry, x0 + rx + rw, y0 + ry + rh]
         win = R.window_from_bounds(scene, res, read)
         assert win == K.clamp_window(scene, res, read)
-        gh, gw = R.grid_shape(scene, res)
+        gh, gw = R.grid_shape_m(scene, res * R.DEG_PER_METRE)
         if win is not None:
             r0, r1, c0, c1 = win
             assert 0 <= r0 < r1 <= gh and 0 <= c0 < c1 <= gw

@@ -9,6 +9,7 @@ import numpy as np
 
 from azure_workflow_for_kml_satellite_spark.functions import pcm_codecs as PC
 from azure_workflow_for_kml_satellite_spark.operators.multimodal import _parse_wav
+from tests.encoders import alaw_encode, ima_adpcm_encode
 
 
 def test_g711_anchor_values():
@@ -35,7 +36,7 @@ def test_g711_codebook_idempotence():
         if code != 0x7F:
             assert re == code, (code, dec, re)
         dec_a = int(PC.alaw_decode(bytes([code]))[0])
-        re_a = PC.alaw_encode(np.array([dec_a]))[0]
+        re_a = alaw_encode(np.array([dec_a]))[0]
         assert re_a == code, (code, dec_a, re_a)
 
 
@@ -43,7 +44,7 @@ def test_g711_quantization_error_bound():
     rng = np.random.default_rng(3)
     xs = rng.integers(-32000, 32000, 4000)
     mu = PC.mulaw_decode(PC.mulaw_encode(xs))
-    al = PC.alaw_decode(PC.alaw_encode(xs))
+    al = PC.alaw_decode(alaw_encode(xs))
     # error ≤ half the widest segment step (µ-law: 256 linear units in the
     # top segment → ≤ 1024 with bias; A-law top step 1024 → ≤ 512 + bias)
     assert np.abs(mu.astype(np.int64) - xs).max() <= 1024
@@ -53,7 +54,7 @@ def test_g711_quantization_error_bound():
 def test_ima_adpcm_roundtrip_tracks_signal():
     t = np.arange(3000)
     sine = (10000 * np.sin(2 * np.pi * t / 100)).astype(np.int16)
-    data, align = PC.ima_adpcm_encode(sine, 1, samples_per_block=505)
+    data, align = ima_adpcm_encode(sine, 1, samples_per_block=505)
     dec = PC.ima_adpcm_decode(data, 1, align)
     assert dec.shape[1] == 1
     n = min(len(sine), dec.shape[0])
@@ -66,7 +67,7 @@ def test_ima_adpcm_roundtrip_tracks_signal():
     assert err[100:].max() < 800
     # stereo: channels decode independently and track
     stereo = np.stack([sine, -sine], axis=1)
-    d2, a2 = PC.ima_adpcm_encode(stereo, 2, samples_per_block=129)
+    d2, a2 = ima_adpcm_encode(stereo, 2, samples_per_block=129)
     dd = PC.ima_adpcm_decode(d2, 2, a2)
     assert dd.shape[1] == 2
     m = min(n, dd.shape[0])
@@ -94,14 +95,14 @@ def test_parse_wav_g711_and_adpcm():
     assert meta["n_samples"] == 1600 and meta["duration_ms"] == 200
     assert meta["rms"] == round(float(np.sqrt(np.mean(dec * dec))), 6)
     # A-law
-    al = PC.alaw_encode(sine)
+    al = alaw_encode(sine)
     meta_a = _parse_wav(_wav(6, 1, 8000, 8, 1, al))
     dec_a = PC.alaw_decode(al).astype(np.float64) / 32768.0
     assert meta_a["rms"] == round(float(np.sqrt(np.mean(dec_a * dec_a))), 6)
     assert meta_a["bits_per_sample"] == 8
     # IMA ADPCM stereo
     stereo = np.stack([sine, (sine // 2).astype(np.int16)], axis=1)
-    data, align = PC.ima_adpcm_encode(stereo, 2, samples_per_block=249)
+    data, align = ima_adpcm_encode(stereo, 2, samples_per_block=249)
     meta_i = _parse_wav(_wav(0x11, 2, 22050, 4, align, data))
     dd = PC.ima_adpcm_decode(data, 2, align).reshape(-1).astype(np.float64) / 32768.0
     assert meta_i["bits_per_sample"] == 4 and meta_i["channels"] == 2

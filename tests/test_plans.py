@@ -117,14 +117,6 @@ def test_salting_spreads_hot_cell(spark):
     assert joined.filter("cell = 8 and payload = 'y'").count() == 100
 
 
-def test_repartition_by_cell(spark):
-    from azure_workflow_for_kml_satellite_spark.plans.skew import repartition_by_cell
-
-    df = spark.range(100).withColumn("cell", F.pmod("id", F.lit(4)))
-    out = repartition_by_cell(df, "cell", partitions=4)
-    assert out.count() == 100
-
-
 def test_mid_stage_kill_then_resume_completes(spark, tmp_path):
     """Simulate a job dying mid-partitioned-stage: only some partitions are
     committed to the table ledger; a NEW manager on the same run_id resumes,
@@ -153,56 +145,6 @@ def test_mid_stage_kill_then_resume_completes(spark, tmp_path):
     assert len(resumed_rows) == 3
     led = cm2.ledger()
     assert led.filter(F.col("stage") == "st").count() == 5
-
-
-def test_legacy_json_ledger_migrates(spark, tmp_path):
-    """A pre-table JSON ledger must migrate into the parquet ledger on read —
-    not be silently ignored (which would re-run completed stages and
-    double-append completed partitions)."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from azure_workflow_for_kml_satellite_spark.plans.checkpoint import CheckpointManager
-
-    run_dir = tmp_path / "legacy"
-    ledger_dir = run_dir / "_ledger"
-    ledger_dir.mkdir(parents=True)
-    (ledger_dir / "st.json").write_text(
-        json.dumps(
-            [
-                {"run_id": "legacy", "stage": "st", "partition": "0",
-                 "rows": 10, "duration_s": 1.0, "status": "completed",
-                 "ts": "2026-01-01T00:00:00"},
-                {"run_id": "legacy", "stage": "st", "partition": "1",
-                 "rows": 10, "duration_s": 1.0, "status": "completed",
-                 "ts": "2026-01-01T00:00:00"},
-            ]
-        )
-    )
-    cm = CheckpointManager(spark, str(tmp_path), run_id="legacy")
-    assert cm.completed_partitions("st") == {"0", "1"}
-    # migration is one-shot: json renamed, parquet rows persist
-    assert not [p for p in ledger_dir.glob("*.json") if not p.name.startswith("_migrated_")]
-    assert list(ledger_dir.glob("_migrated_*.json"))
-    assert cm.completed_partitions("st") == {"0", "1"}
-    # resume computes only the missing partitions
-    df = spark.range(40).withColumn("grp", (F.col("id") % 4).cast("string"))
-    cm.partitioned_stage("st", df, "grp")
-    assert cm.completed_partitions("st") == {"0", "1", "2", "3"}
-
-
-def test_legacy_json_ledger_bad_format_raises(spark, tmp_path):
-    import pytest
-
-    from azure_workflow_for_kml_satellite_spark.plans.checkpoint import CheckpointManager
-
-    ledger_dir = tmp_path / "bad" / "_ledger"
-    ledger_dir.mkdir(parents=True)
-    (ledger_dir / "x.json").write_text("{not json")
-    cm = CheckpointManager(spark, str(tmp_path), run_id="bad")
-    with pytest.raises(RuntimeError, match="incompatible ledger format"):
-        cm.ledger()
 
 
 def test_ledger_two_writer_race_serializes(spark, tmp_path):
@@ -330,6 +272,42 @@ def test_ledger_expire_snapshots_and_remove_orphans(spark, tmp_path):
     cm.expire_snapshots(keep_last=1)
     assert cm.remove_orphans(older_than_s=0) == []
     assert len(cm.ledger_rows()) == 4
+
+
+def test_ledger_ignores_stray_files_without_a_manifest(spark, tmp_path):
+    """Only ``commit-*`` files listed by a manifest are ledger data. A JSON
+    file and a non-commit parquet file in ``_ledger/`` with no manifest are
+    not read, not folded into the first commit, and not collected as
+    orphans."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azure_workflow_for_kml_satellite_spark.plans.checkpoint import CheckpointManager
+
+    cm = CheckpointManager(spark, str(tmp_path), run_id="stray")
+    row = {
+        "run_id": "stray", "stage": "st", "partition": "__ALL__", "rows": 1,
+        "duration_s": 0.0, "status": "completed", "ts": "2026-01-01T00:00:00",
+    }
+    cm.ledger_dir.mkdir(parents=True)
+    stray_json = cm.ledger_dir / "st.json"
+    stray_json.write_text(json.dumps([row]))
+    stray_parquet = cm.ledger_dir / "part-00000.parquet"
+    pq.write_table(pa.Table.from_pylist([row]), stray_parquet)
+
+    assert cm.ledger_rows() == []
+    assert cm.ledger().count() == 0
+    assert not cm.stage_completed("st")
+    assert cm.snapshots() == []
+    assert cm.remove_orphans(older_than_s=0) == []
+    assert stray_json.exists() and stray_parquet.exists()
+
+    cm._append_ledger([{**row, "stage": "other"}])
+    files = cm._read_manifest(1)["files"]
+    assert len(files) == 1 and files[0].startswith("commit-")
+    assert [r["stage"] for r in cm.ledger_rows()] == ["other"]
 
 
 def test_ledger_rollback_commit_branches_history(spark, tmp_path):

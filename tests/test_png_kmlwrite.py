@@ -1,19 +1,8 @@
-"""PNG fallback decoder (S12/G19), tile math (G9), KML writer (G17)."""
+"""PNG fallback decoder (S12/G19)."""
 
 import numpy as np
-import pytest
 
 from azure_workflow_for_kml_satellite_spark.functions import png as P
-from azure_workflow_for_kml_satellite_spark.functions import kml_write as KW
-from azure_workflow_for_kml_satellite_spark.functions import kml as K
-
-
-def test_webmercator_tile_z12():
-    # Greenwich equator → middle of the grid (int() truncation per reference)
-    assert P.webmercator_tile(0.0, 0.0, 12) == (2048, 2048)
-    assert P.webmercator_tile(-0.01, 0.01, 12) == (2047, 2047)
-    x, y = P.webmercator_tile(-60.0, -10.0, 12)
-    assert 0 <= x < 4096 and 0 <= y < 4096
 
 
 def test_png_roundtrip_and_red_channel():
@@ -77,23 +66,3 @@ def test_paeth_filter_roundtrip():
     )
     decoded, _ = P.decode_png(png)
     assert np.array_equal(decoded, img)
-
-
-def test_coords_to_kml_roundtrip_through_parser():
-    plots = [
-        {"name": "Poly <A>", "coordinates": [[0, 0], [1, 0], [1, 1]]},
-        {"name": "Point B", "lon": 36.8, "lat": -1.3},
-    ]
-    kml = KW.coords_to_kml(plots, doc_name="Test & Co")
-    feats = K.parse_kml(kml.encode(), "gen.kml")
-    assert len(feats) == 2
-    assert feats[0]["name"] == "Poly <A>"  # escaping round-trips
-    assert feats[0]["exterior_coords"][0] == feats[0]["exterior_coords"][-1]
-    assert len(feats[1]["exterior_coords"]) == 33  # 32-segment circle closed
-
-
-def test_point_buffer_pole_clamp():
-    ring = KW.point_buffer(0.0, 89.9999999, 100.0)
-    assert all(np.isfinite(c[0]) and np.isfinite(c[1]) for c in ring)
-    with pytest.raises(ValueError):
-        KW.point_buffer(0, 0, -5)

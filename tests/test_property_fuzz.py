@@ -314,6 +314,7 @@ def test_fuzz_compressed_wav_parsers_never_crash(_):
     import struct as _s
 
     from azure_workflow_for_kml_satellite_spark.functions import pcm_codecs as PC
+    from tests.encoders import alaw_encode, ima_adpcm_encode
     from azure_workflow_for_kml_satellite_spark.operators.multimodal import _parse_wav
 
     def wav(fmt, channels, rate, bits, align, payload):
@@ -325,10 +326,10 @@ def test_fuzz_compressed_wav_parsers_never_crash(_):
     rng = np.random.default_rng(48)
     t = np.arange(900)
     sine = (9000 * np.sin(2 * np.pi * t / 90)).astype(np.int16)
-    adpcm, align = PC.ima_adpcm_encode(sine, 1, samples_per_block=249)
+    adpcm, align = ima_adpcm_encode(sine, 1, samples_per_block=249)
     for blob in (
         wav(7, 1, 8000, 8, 1, PC.mulaw_encode(sine)),
-        wav(6, 1, 8000, 8, 1, PC.alaw_encode(sine)),
+        wav(6, 1, 8000, 8, 1, alaw_encode(sine)),
         wav(0x11, 1, 22050, 4, align, adpcm),
     ):
         _fuzz_roundtrip(_parse_wav, blob, 800, rng)

@@ -10,6 +10,7 @@ import pytest
 
 from azure_workflow_for_kml_satellite_spark.functions import vp8l as V
 from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_webp
+from tests.encoders import emit_symbol, write_prefix_code
 
 # first 60 entries as listed in the published VP8L specification §4.2.2
 _SPEC_PREFIX = [
@@ -195,16 +196,16 @@ def test_handmade_color_cache_and_lz77():
     g_lengths = [0] * (256 + 24 + (1 << cache_bits))
     for s in (g_p, g_q, len_sym, cache_sym):
         g_lengths[s] = 2
-    g_codes, _ = V.write_prefix_code(wr, g_lengths)
+    g_codes, _ = write_prefix_code(wr, g_lengths)
     _single_tree(wr, 5)  # red
     _single_tree(wr, 9)  # blue
     _single_tree(wr, 255)  # alpha
     _pair_tree(wr, 1, 0)  # distance: symbol 1 → dist_code 2 → map (1,0)
-    V.emit_symbol(wr, g_codes, g_lengths, g_p)  # literal P
-    V.emit_symbol(wr, g_codes, g_lengths, len_sym)  # copy 3 @ dist 1
+    emit_symbol(wr, g_codes, g_lengths, g_p)  # literal P
+    emit_symbol(wr, g_codes, g_lengths, len_sym)  # copy 3 @ dist 1
     wr.write(1, 1)  # distance symbol 1 (canonical: 0→bit0, 1→bit1)
-    V.emit_symbol(wr, g_codes, g_lengths, g_q)  # literal Q
-    V.emit_symbol(wr, g_codes, g_lengths, cache_sym)  # cache hit → P
+    emit_symbol(wr, g_codes, g_lengths, g_q)  # literal Q
+    emit_symbol(wr, g_codes, g_lengths, cache_sym)  # cache hit → P
     out = V.decode_vp8l(bytes(wr.buf))
     g = out[0, :, 1].tolist()
     assert g == [g_p, g_p, g_p, g_p, g_q, g_p]
